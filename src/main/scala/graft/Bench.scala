@@ -122,7 +122,8 @@ object Bench {
     if (chunk.isDefined) runInProcess(sfDir, chunk) // child: one chunk, one JSON line
     else if (fork) {
       forked(sfDir) match {
-        case Some(json) => println(json); writeFullLine(json); printSummaryLine(json)
+        case Some((json, summary)) =>
+          println(json); writeFullLine(json); println(summaryLine(summary))
         case None =>
           System.err.println("[bench] fork-per-group failed; single-JVM fallback")
           runInProcess(sfDir, None)
@@ -130,8 +131,13 @@ object Bench {
     } else runInProcess(sfDir, None)
   }
 
-  private def benchCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-    Runtime.getRuntime.availableProcessors.toString)
+  /** Task slots: `SPARK_GRAFT_CPUS` when it is a positive integer, else
+    * every core — the value goes into the JSON and a file name unquoted. */
+  private[graft] def cpusFrom(env: Option[String]): Int =
+    env.flatMap(_.trim.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  private lazy val benchCpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
 
   /** The r13 verdict found the driver's captured bench line TRUNCATED mid-
     * tail (~15 per-query numbers lost from the auditable set). The full
@@ -152,6 +158,10 @@ object Bench {
     put(s"BENCH_FULL_c$benchCpus.json")
   }
 
+  /** What the summary line reports, taken from the run's own values. */
+  private[graft] final case class Summary(total: Double, calib: Option[Double],
+      nQueries: Int, cpus: Int)
+
   /** The driver captures only a ~2 KB tail of bench output; the full line
     * (~4.8 KB at 159 queries) never survives it whole, so the driver's
     * round-over-round PERF comparison parsed null for two straight rounds
@@ -161,15 +171,9 @@ object Bench {
     * honest total rather than an empty per-query map it could misread as
     * every query having been dropped. Parent/whole-surface mode only; a
     * chunk child must print exactly one line for parseChunkLine. */
-  private def printSummaryLine(json: String): Unit = {
-    def grab(k: String): Option[String] =
-      ("\"" + k + "\":([0-9.]+)").r.findFirstMatchIn(json).map(_.group(1))
-    val v = grab("value").getOrElse("null")
-    val calib = grab("calib").fold("")(c => s""""calib":$c,""")
-    val qIdx = json.indexOf("\"queries\":{")
-    val n = if (qIdx < 0) 0
-      else "\"[a-z0-9_]+\":[0-9.]+".r.findAllIn(json.drop(qIdx)).size
-    println(s"""{"metric":"total","value":$v,"unit":"sec",$calib"cpus":$benchCpus,"n_queries":$n,"mode":"summary","full":"BENCH_FULL_c$benchCpus.json"}""")
+  private[graft] def summaryLine(s: Summary): String = {
+    val calib = s.calib.fold("")(c => s""""calib":${num(c)},""")
+    s"""{"metric":"total","value":${num(s.total)},"unit":"sec",$calib"cpus":${s.cpus},"n_queries":${s.nQueries},"mode":"summary","full":"BENCH_FULL_c${s.cpus}.json"}"""
   }
 
   /** Max queries per child JVM. The round-8 measurement: a 24-query group
@@ -239,7 +243,7 @@ object Bench {
     }
   }
 
-  private def forked(sfDir: String): Option[String] = {
+  private def forked(sfDir: String): Option[(String, Summary)] = {
     val cpOpt = try {
       val classesDir = new java.io.File(
         getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getPath
@@ -264,6 +268,7 @@ object Bench {
       val calibs = parts.flatten.flatMap(_._2)
       if (parts.exists(_.isEmpty) || expected.exists(q => !merged.contains(q))) None
       else {
+        val total = expected.map(merged).sum
         val qs = expected.map(k => "\"" + k + "\":" + num(merged(k))).mkString("{", ",", "}")
         val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
         // calib: per-child host-speed probe — median is the round's number
@@ -271,7 +276,9 @@ object Bench {
         val calibJson =
           if (calibs.isEmpty) ""
           else s""""calib":${num(median(calibs))},"calib_min":${num(calibs.min)},"calib_max":${num(calibs.max)},"""
-        Some(s"""{"metric":"total","value":${num(expected.map(merged).sum)},"unit":"sec","runs":$runs,"agg":"min",${calibJson}${memoizedJson(expected)}"mode":"fork-per-group","queries":$qs,"sf":"$sfDir"}""")
+        val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":$runs,"agg":"min",${calibJson}${memoizedJson(expected)}"mode":"fork-per-group","queries":$qs,"sf":"$sfDir"}"""
+        Some((line, Summary(total, Option.when(calibs.nonEmpty)(median(calibs)),
+          expected.size, benchCpus)))
       }
     }
   }
@@ -279,11 +286,10 @@ object Bench {
   /** Single-JVM bench over all queries (chunk = None) or a child's slice
     * (chunk = Some(names)). Prints the JSON line itself. */
   private def runInProcess(sfDir: String, chunk: Option[Set[String]]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .withExtensions(new graft.functions.GraftExtensions)
+      .master(s"local[$benchCpus]")
+      .config("spark.sql.shuffle.partitions", benchCpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
@@ -357,7 +363,7 @@ object Bench {
     println(line)
     if (chunk.isEmpty) { // whole-surface mode only, not per-chunk children
       writeFullLine(line)
-      printSummaryLine(line)
+      println(summaryLine(Summary(total, calib, results.size, benchCpus)))
     }
     spark.stop()
   }

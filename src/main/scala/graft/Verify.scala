@@ -13,6 +13,7 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

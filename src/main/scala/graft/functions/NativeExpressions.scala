@@ -1258,8 +1258,12 @@ object GraftFunctions {
 }
 
 /** spark.sql.extensions entry point (SparkSessionExtensions injection —
-  * the idiomatic deployment hook for engine extensions). */
+  * the idiomatic deployment hook for engine extensions): the native
+  * functions, and the planner rule [[graft.runner.SmallSortExchange]].
+  * `SparkRunner`, `Bench` and `Verify` install it via `withExtensions`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach(ext.injectFunction)
+    ext.injectQueryStagePrepRule(_ => graft.runner.SmallSortExchange)
+  }
 }

@@ -56,10 +56,12 @@ object PageRank {
     // materialization pass plus a cache write/read round-trip before the
     // local loop even started; the probe is one executeTake. Above the
     // gate the probe's rows are discarded (bounded by localEdgeMax) and
-    // the distributed path persists + counts as before.
-    if (localEdgeMax > 0 && localEdgeMax < Int.MaxValue) {
-      val took = e0.limit(localEdgeMax.toInt + 1).collect()
-      if (took.length <= localEdgeMax) return runLocal(e0, took, iters, dampPct)
+    // the distributed path persists + counts as before. A gate at or above
+    // Int.MaxValue ("always local") is clamped to what a limit can take.
+    if (localEdgeMax > 0) {
+      val probe = math.min(localEdgeMax, Int.MaxValue - 1L).toInt
+      val took = e0.limit(probe + 1).collect()
+      if (took.length <= probe) return runLocal(e0, took, iters, dampPct)
     }
     val e = e0.persist()
     e.count() // materializes the persist for the distributed rounds

@@ -78,15 +78,19 @@ object CoreQueries2 {
       |ORDER BY a.o_custkey""".stripMargin
 
   /** Exact interpolated percentiles over integer cents (Spark `percentile`
-    * vs DuckDB `quantile_cont` — both interpolate on the sorted values). */
+    * vs DuckDB `quantile_cont` — both interpolate on the sorted values).
+    * Both percentiles come from one `percentile` buffer (one value-count
+    * map per group to hash, shuffle and merge, not two); the interpolation
+    * over the same counts is unchanged. */
   def medianPrices(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")
       .select(col("l_returnflag"), cents(col("l_extendedprice")).as("c"))
       .groupBy("l_returnflag")
       .agg(
-        expr("percentile(c, 0.5)").as("median_c"),
-        expr("percentile(c, 0.9)").as("p90_c"),
+        expr("percentile(c, array(0.5, 0.9))").as("pc"),
         count(lit(1)).as("cnt"))
+      .select(col("l_returnflag"), col("pc")(0).as("median_c"),
+        col("pc")(1).as("p90_c"), col("cnt"))
       .orderBy("l_returnflag")
 
   val medianPricesSql: String =

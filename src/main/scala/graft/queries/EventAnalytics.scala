@@ -678,9 +678,7 @@ object EventAnalytics {
         quint("p_m").as("m_score"), col("monetary_c"))
       .groupBy("r_score", "f_score", "m_score")
       .agg(count(lit(1)).as("n_users"), sum("monetary_c").as("tot_c"))
-      // ≤125 rows: a single-partition sort replaces orderBy's extra
-      // range-sample job (identical output order)
-      .coalesce(1).sortWithinPartitions("r_score", "f_score", "m_score")
+      .orderBy("r_score", "f_score", "m_score")
   }
 
   val rfmSql: String =

@@ -14,7 +14,13 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
   *
   * Scale defaults: shuffle partitions from config (not Spark's 200), AQE on
   * — at 100 TB AQE coalesces post-shuffle partitions and re-plans skew joins
-  * at runtime, so one static setting serves all scale factors.
+  * at runtime, so one static setting serves all scale factors. The session
+  * carries [[graft.functions.GraftExtensions]], whose
+  * [[SmallSortExchange]] rule runs a global sort as one partition when AQE
+  * has measured its input at no more than
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB by default):
+  * that skips `RangePartitioner`'s sampling job, which recomputes the sort's
+  * whole input. Larger sorts keep range partitioning.
   */
 abstract class SparkRunner[ADT <: GraftEvent](
     val config: GraftConfig,
@@ -22,6 +28,7 @@ abstract class SparkRunner[ADT <: GraftEvent](
 
   lazy val spark: SparkSession = {
     val b = SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions)
       .appName(config.getString("app.name", s"graft-${config.jobName}"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", config.getInt("shuffle.partitions", 32))

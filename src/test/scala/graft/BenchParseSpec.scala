@@ -51,6 +51,23 @@ class BenchParseSpec extends AnyFunSuite {
     assert(Bench.parseChunkLine(line, g).isEmpty)
   }
 
+  test("summary line is formatted from the values, never in scientific notation") {
+    assert(Bench.summaryLine(Bench.Summary(12345678.9, Some(0.4621), 159, 32)) ===
+      """{"metric":"total","value":12345678.900,"unit":"sec","calib":0.462,"cpus":32,"n_queries":159,"mode":"summary","full":"BENCH_FULL_c32.json"}""")
+    assert(Bench.summaryLine(Bench.Summary(1e-7, None, 1, 8)) ===
+      """{"metric":"total","value":0.000,"unit":"sec","cpus":8,"n_queries":1,"mode":"summary","full":"BENCH_FULL_c8.json"}""")
+  }
+
+  test("SPARK_GRAFT_CPUS is used only when it is a positive integer") {
+    val all = Runtime.getRuntime.availableProcessors
+    assert(Bench.cpusFrom(Some("8")) === 8)
+    assert(Bench.cpusFrom(Some(" 16 ")) === 16)
+    Seq(None, Some(""), Some("eight"), Some("8 cores"), Some("0"), Some("-4"),
+      Some("99999999999")).foreach { v =>
+      assert(Bench.cpusFrom(v) === all, s"for $v")
+    }
+  }
+
   test("sentinel-sized garbage values do not slip through as times") {
     // a query failing every pass used to format Double.MaxValue into the
     // JSON; the child now omits it, so the parent sees a missing query

@@ -98,6 +98,41 @@ object SparkSpec {
     dst.setLastModified(1700000000000L + i * 60000L)
   }
 
+  /** `body`'s result and the number of jobs it submits. Jobs are counted
+    * by a local property set for the duration of `body`; a marker job
+    * submitted afterwards is awaited, and since the listener bus delivers
+    * in order, every counted job's start event has arrived by then. */
+  def jobsDuring[T](spark: SparkSession)(body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val token = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(`token`) => jobs.incrementAndGet()
+          case Some(t) if t == token + ":end" => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    val outer = sc.getLocalProperty(key)
+    try {
+      sc.setLocalProperty(key, token)
+      val result = body
+      sc.setLocalProperty(key, token + ":end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      (result, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, outer)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** The usual 3-file ordered ingest in one call. */
   def writeOrderedStreamParts(df: org.apache.spark.sql.DataFrame,
       streamIn: java.io.File, n: Int = 3): Unit =
@@ -107,6 +142,7 @@ object SparkSpec {
 
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", 4)

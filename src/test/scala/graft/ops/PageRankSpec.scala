@@ -64,6 +64,19 @@ class PageRankSpec extends SparkSpec {
     dist shouldBe local
   }
 
+  it should "take the local path for a gate at or above Int.MaxValue" in {
+    import spark.implicits._
+    val edges = Seq(("a", "b", 3L), ("a", "c", 1L), ("b", "c", 2L),
+      ("c", "a", 1L)).toDF("src", "dst", "w")
+    def jobs(gate: Long): Int = graft.SparkSpec.jobsDuring(spark) {
+      PageRank.run(edges, 4, localEdgeMax = gate).collect()
+    }._2
+    val local = jobs(1L << 20)
+    jobs(Int.MaxValue.toLong) shouldBe local
+    jobs(Long.MaxValue) shouldBe local
+    jobs(0L) should be > local // forced distributed rounds
+  }
+
   it should "drop zero-weight edges identically on both paths" in {
     import spark.implicits._
     // node "z" has only a zero-weight out-edge: it must count as dangling
