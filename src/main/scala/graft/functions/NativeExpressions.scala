@@ -1259,11 +1259,19 @@ object GraftFunctions {
 
 /** spark.sql.extensions entry point (SparkSessionExtensions injection —
   * the idiomatic deployment hook for engine extensions): the native
-  * functions, and the planner rule [[graft.runner.SmallSortExchange]].
-  * `SparkRunner`, `Bench` and `Verify` install it via `withExtensions`. */
+  * functions, the planner rule [[graft.runner.SmallSortExchange]], and the
+  * optimizer rule [[graft.agg.PercentileRewrite]], which runs Spark's exact
+  * `percentile` (also behind `median` and `percentile_cont`) on the
+  * primitive-buffer kernel [[graft.agg.ExactPercentile]] with bit-identical
+  * results when the percentage is foldable, the frequency is the default 1
+  * and the input is Byte/Short/Int/Long/Float/Double; decimal and interval
+  * inputs, frequency columns, `percentile_disc` and streaming plans keep
+  * Spark's aggregate. `SparkRunner`, `Bench` and `Verify` install it via
+  * `withExtensions`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach(ext.injectFunction)
     ext.injectQueryStagePrepRule(_ => graft.runner.SmallSortExchange)
+    ext.injectOptimizerRule(_ => graft.agg.PercentileRewrite)
   }
 }

@@ -64,6 +64,13 @@ object RangeScan {
     * Hot keys: above HALF a fair share of a b-way scan — ≤ 2b of them by
     * pigeonhole, so the collect is bounded by parallelism, not data (the
     * skew audit's salt_rec rule, at half threshold for sampling margin).
+    * The bound holds for the exact threshold tot/(2b): every key at or
+    * above it is among the top 2b sampled keys and is caught. The applied
+    * threshold is floored, max(tot/(2b), 1), but only the top 2b keys are
+    * collected, so when more than 2b keys reach the floored threshold
+    * (tot=99, 2b=10: 11 keys of count 9, exact threshold 9.9) the ties
+    * past the 2b-th are left out. They sit below the exact fair share, and
+    * leaving one out only changes where its rows land.
     * Detection runs on a 1% SAMPLE (the RangePartitioner discipline): a
     * key near 1/b of the data is unmissable there, and a key small enough
     * to slip under the sampled threshold was never a straggler. The same

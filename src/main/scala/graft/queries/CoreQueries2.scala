@@ -79,9 +79,10 @@ object CoreQueries2 {
 
   /** Exact interpolated percentiles over integer cents (Spark `percentile`
     * vs DuckDB `quantile_cont` — both interpolate on the sorted values).
-    * Both percentiles come from one `percentile` buffer (one value-count
-    * map per group to hash, shuffle and merge, not two); the interpolation
-    * over the same counts is unchanged. */
+    * Both percentiles come from one `percentile` buffer (one set of
+    * sorted value-count runs per group to build, shuffle and merge, not
+    * two; [[graft.agg.ExactPercentile]]); the interpolation over the same
+    * counts is unchanged. */
   def medianPrices(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")
       .select(col("l_returnflag"), cents(col("l_extendedprice")).as("c"))
@@ -173,10 +174,11 @@ object CoreQueries2 {
       |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** Exact median WITHOUT buffering raw values — the scale path beside
-    * `core_median_prices` (whose `percentile` buffers every value per
-    * group: fine at bench scale, a per-group sort of the full data at
-    * 100 TB). Here the shuffle carries one (group, distinct-cents) partial
-    * count per map side — value-histogram selection: running cumulative
+    * `core_median_prices` (whose `percentile` keeps every distinct value
+    * of a group in one buffer, merged on one task: fine at bench scale, a
+    * per-group sort of the full data's distinct values at 100 TB). Here
+    * the shuffle carries one (group, distinct-cents) partial count per
+    * map side — value-histogram selection: running cumulative
     * over the ordered distinct values locates the lower/upper middle
     * elements exactly. `median_twice_c = lo+hi` keeps even-count medians
     * in exact integer cents (verified == 2·DuckDB-median). */

@@ -371,7 +371,8 @@ object CorpusQueries {
   /** Per-language token-length profile — the distribution table length
     * filters are calibrated from (min/median/p90/max word counts per
     * language, exact interpolated percentiles over integer counts). One
-    * narrow count map + one map-side-combined groupBy. */
+    * narrow count map + one map-side-combined groupBy; both percentiles
+    * come from one `percentile` buffer per language. */
   def lengthProfile(s: SparkSession, dir: String): DataFrame = {
     val words = call_function("graft_words", col("text"))
     tPar(s, dir, "documents")
@@ -379,9 +380,11 @@ object CorpusQueries {
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         min("n_words").as("min_words"),
-        expr("percentile(n_words, 0.5)").as("p50_words"),
-        expr("percentile(n_words, 0.9)").as("p90_words"),
+        expr("percentile(n_words, array(0.5, 0.9))").as("pw"),
         max("n_words").as("max_words"))
+      .select(col("lang"), col("n_docs"), col("min_words"),
+        col("pw")(0).as("p50_words"), col("pw")(1).as("p90_words"),
+        col("max_words"))
       .orderBy("lang")
   }
 

@@ -139,25 +139,44 @@ object Q {
       java.lang.Long.valueOf(t(spark, dir, name).count())
     }.longValue
 
-  /** get-then-putIfAbsent memo (ADVICE r21): a Spark job must not run
-    * INSIDE ConcurrentHashMap.computeIfAbsent — the bin lock is held for
-    * the job's whole duration (distinct keys hashing to the same bin
-    * serialize behind it, and a recursive same-key call throws
-    * IllegalStateException). Computing outside the lock can race two
-    * identical jobs, which is harmless: every memoized value here is a
-    * deterministic function of the key's data fingerprint, and putIfAbsent
-    * keeps the first. */
+  /** Compute-once memo. A Spark job must not run INSIDE
+    * ConcurrentHashMap.computeIfAbsent — the bin lock is held for the
+    * job's whole duration (distinct keys hashing to the same bin serialize
+    * behind it, and a recursive same-key call throws
+    * IllegalStateException). So a miss first gets the lock object of
+    * (`map`, `k`) — computeIfAbsent only creates that object, it never
+    * runs the job — and computes under it: a second caller for the same key waits and reads
+    * the first one's value instead of running the same job again, and
+    * distinct keys still compute in parallel. The lock objects stay, one
+    * per key, as long as the memo entries do. A compute that throws caches
+    * nothing; the next caller computes again. */
   def memo[K, V <: AnyRef](
       map: java.util.concurrent.ConcurrentHashMap[K, V], k: K)(
       compute: => V): V = {
     val cached = map.get(k)
     if (cached != null) cached
-    else {
-      val v = compute
-      val prev = map.putIfAbsent(k, v)
-      if (prev != null) prev else v
+    else memoLocks.computeIfAbsent(new MemoKey(map, k), _ => new Object).synchronized {
+      val raced = map.get(k)
+      if (raced != null) raced
+      else {
+        val v = compute
+        map.put(k, v)
+        v
+      }
     }
   }
+
+  /** Lock key of [[memo]]: the map by identity (its own hashCode changes
+    * as entries arrive), the key by value. */
+  private final class MemoKey(val map: AnyRef, val k: Any) {
+    override def hashCode: Int = 31 * System.identityHashCode(map) + k.##
+    override def equals(o: Any): Boolean = o match {
+      case m: MemoKey => (m.map eq map) && m.k == k
+      case _ => false
+    }
+  }
+
+  private val memoLocks = new java.util.concurrent.ConcurrentHashMap[MemoKey, AnyRef]()
 
   /** Cache key for per-JVM memos over a tier's table: dir plus a cheap
     * file fingerprint (names + sizes + mtimes of the parquet file set), so

@@ -140,17 +140,22 @@ object SketchQueries {
     * classic sketch family (distinct=HLL, membership=SBF, frequency=
     * SpaceSaving, rank=this): Spark's percentile_approx keeps an
     * accuracy-bounded summary per group (state independent of group size;
-    * error ≤ 1/accuracy of the rank) where exact percentile buffers every
-    * value. At 100 TB the exact form is a per-group sort of the full data;
-    * the sketch is the shape that survives. Approximate values are
-    * engine-local → rows-only beside the exact twin `core_median_prices`. */
+    * error ≤ 1/accuracy of the rank) where exact percentile keeps every
+    * distinct value as O(distinct) sorted (value, count) runs
+    * ([[graft.agg.ExactPercentile]]). At 100 TB the exact form is a
+    * per-group sort of the full data's distinct values; the sketch is the
+    * shape that survives. The exact pair comes from one buffer per group.
+    * Approximate values are engine-local → rows-only beside the exact twin
+    * `core_median_prices`. */
   def quantiles(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem").groupBy("l_returnflag").agg(
-      expr("percentile(l_extendedprice, 0.5)").as("exact_p50"),
+      expr("percentile(l_extendedprice, array(0.5, 0.9))").as("exact"),
       expr("percentile_approx(l_extendedprice, 0.5, 1000)").as("approx_p50"),
-      expr("percentile(l_extendedprice, 0.9)").as("exact_p90"),
       expr("percentile_approx(l_extendedprice, 0.9, 1000)").as("approx_p90"),
       count(lit(1)).as("n_rows"))
+      .select(col("l_returnflag"), col("exact")(0).as("exact_p50"),
+        col("approx_p50"), col("exact")(1).as("exact_p90"), col("approx_p90"),
+        col("n_rows"))
       .orderBy("l_returnflag")
 
   /** Count-Min frequency estimates per user beside the exact counts — and,

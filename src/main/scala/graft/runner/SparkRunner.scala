@@ -20,7 +20,14 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
   * has measured its input at no more than
   * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB by default):
   * that skips `RangePartitioner`'s sampling job, which recomputes the sort's
-  * whole input. Larger sorts keep range partitioning.
+  * whole input. Larger sorts keep range partitioning. Its optimizer rule
+  * [[graft.agg.PercentileRewrite]] runs exact `percentile`, `median` and
+  * `percentile_cont` on [[graft.agg.ExactPercentile]], a primitive sorted-
+  * run buffer (O(distinct) memory, varint shuffle form) with results
+  * bit-identical to Spark's, whenever the percentage is foldable, there is
+  * no frequency column and the input is integral, float or double; decimal
+  * and interval inputs, `percentile_disc` and streaming plans keep Spark's
+  * boxed aggregate.
   */
 abstract class SparkRunner[ADT <: GraftEvent](
     val config: GraftConfig,
