@@ -286,13 +286,10 @@ object Bench {
   /** Single-JVM bench over all queries (chunk = None) or a child's slice
     * (chunk = Some(names)). Prints the JSON line itself. */
   private def runInProcess(sfDir: String, chunk: Option[Set[String]]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
+    val spark = graft.runner.SparkRunner.builder()
       .master(s"local[$benchCpus]")
       .config("spark.sql.shuffle.partitions", benchCpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

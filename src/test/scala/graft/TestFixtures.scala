@@ -140,14 +140,47 @@ object SparkSpec {
       writeStreamPart(p, streamIn, i)
     }
 
+  /** Replay `parts` through the streaming query `twin` into a
+    * `foreachBatch` sink, one file per micro-batch (`maxFilesPerTrigger`
+    * 1, `Trigger.AvailableNow`), and return every row the sink received,
+    * sorted. Without `restart` all files exist before one run. With
+    * `restart` they appear one at a time and each is drained by a new query
+    * resuming from the same checkpoint, so the query stops and restarts at
+    * every micro-batch boundary. */
+  def replay(spark: SparkSession, name: String,
+      parts: Seq[org.apache.spark.sql.DataFrame], restart: Boolean)(
+      twin: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_]): Seq[String] = {
+    val in = new java.io.File(tempDir(s"$name-in"))
+    val ck = tempDir(s"$name-ck") + "/q"
+    val rows = scala.collection.mutable.ArrayBuffer.empty[String]
+    def run(): Int = {
+      val q = twin(spark.readStream.schema(parts.head.schema)
+          .option("maxFilesPerTrigger", 1).parquet(in.getAbsolutePath))
+        .toDF().writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          val got = b.collect().map(_.toString)
+          rows.synchronized { rows ++= got }
+          ()
+        }
+        .option("checkpointLocation", ck)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q.recentProgress.count(_.numInputRows > 0)
+    }
+    val batches =
+      if (restart) parts.indices.map { i => writeStreamPart(parts(i), in, i); run() }
+      else { parts.indices.foreach(i => writeStreamPart(parts(i), in, i)); Seq(run()) }
+    assert(batches.sum == parts.size && batches.forall(_ > 0),
+      s"data micro-batches per run: ${batches.mkString(",")}")
+    rows.sorted.toSeq
+  }
+
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
+    val s = graft.runner.SparkRunner.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // transformWithState (EmaState/ControlGate/TtlDedup/CountWindows/SBF)
       // requires the RocksDB state store provider
       .config("spark.sql.streaming.stateStore.providerClass",

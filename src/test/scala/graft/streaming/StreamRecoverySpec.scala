@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.queries.{EventAnalytics, Q}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -77,5 +78,45 @@ class StreamRecoverySpec extends SparkSpec {
       .select("user_id", "twap_num", "twap_den")
     latest.count() shouldBe batch.count()
     latest.exceptAll(batch).count() shouldBe 0L
+  }
+
+  // The three twins of the stream benchmark, restarted from the checkpoint
+  // after every micro-batch: every row their sinks receive must equal the
+  // uninterrupted run's. 327 events (5 of the 15 users, whole histories) in
+  // 4 event-time-ordered files.
+  private def restartMatchesUninterrupted(name: String, cols: Seq[Column])(
+      twin: DataFrame => Dataset[_]): Unit = {
+    assume(new java.io.File(s"$sfDir/events.parquet").exists())
+    val ev = Q.events(spark, sfDir).filter(col("user_id") % 3 === 0).select(cols: _*)
+    val parts = graft.SparkSpec.timeOrderedParts(ev, 4)
+    val once = graft.SparkSpec.replay(spark, name, parts, restart = false)(twin)
+    val restarted = graft.SparkSpec.replay(spark, name, parts, restart = true)(twin)
+    once should not be empty
+    restarted shouldBe once
+  }
+
+  private val attrCols = Seq("event_id", "ts_us", "user_id", "event_type").map(col)
+
+  it should "give StreamFunnel's uninterrupted sink rows across a restart at every micro-batch" in {
+    import spark.implicits._
+    restartMatchesUninterrupted("funnel", attrCols) { df =>
+      StreamFunnel(df.as[StreamFunnel.FunnelEvent], "view", "click", "purchase",
+        7L * 24 * 3600 * 1000000)
+    }
+  }
+
+  it should "give StreamRfm's uninterrupted sink rows across a restart at every micro-batch" in {
+    import spark.implicits._
+    restartMatchesUninterrupted("rfm",
+        Seq(col("user_id"), col("ts_us"), Q.cents(col("value")).as("cents"))) { df =>
+      StreamRfm(df.as[StreamRfm.RfmEvent])
+    }
+  }
+
+  it should "give StreamScd2's uninterrupted sink rows across a restart at every micro-batch" in {
+    import spark.implicits._
+    restartMatchesUninterrupted("scd2", attrCols) { df =>
+      StreamScd2(df.as[StreamScd2.AttrEvent])
+    }
   }
 }
