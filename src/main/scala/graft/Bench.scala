@@ -39,40 +39,19 @@ object Bench {
   private val SKIP = Set("text_ngram_jaccard", "text_simhash_pairs",
     "vec_cosine_pairs", "vec_ann_recall", "text_ssjoin")
 
-  /** Queries whose warm min-of-N time reads a JVM-lifetime memoized
-    * artifact built on first touch (the gram/LM frames of CorpusQueries,
-    * the IVF coarse codebook of VectorQueries) — declared in the bench
-    * JSON (round 19, ADVICE r18) so cross-engine totals stay
-    * interpretable: a DuckDB oracle retrains these artifacts every run,
-    * the Spark side deliberately does not (build-once pipeline-artifact
-    * semantics). The artifact build cost IS paid inside the same chunk's
-    * warm-up pass, so chunk wall-clock still contains it exactly once. */
-  private val MEMOIZED = Set("text_lm_score", "text_ppl_buckets",
-    "text_dsir_weights", "vec_ann_ivf", "vec_ann_ivfpq",
-    "text_hybrid_search", "text_retrieval_eval", "vec_hard_negatives",
-    "vec_knn_graph", "graph_communities",
-    // consumers of the near-dup candidate-pair artifact (round 19; round
-    // 20 fixed the artifact's lifecycle — the builder's frame used to be
-    // scope-registered and died with its first consumer's CacheBin
-    // release, so these declarations only became TRUE of the timed runs
-    // once the memo owned the persist, ADVICE r19)
-    "text_minhash_pairs", "text_dup_clusters", "text_cluster_best",
-    "text_lsh_eval", "pipe_split_leakage", "pipe_split_clusters",
-    // round-21 memo readers the r21 declaration missed (VERDICT r21 #2):
-    // text_tfidf reads Q.tableCount, vec_dedup_removal the maxId memo
-    "text_tfidf", "vec_dedup_removal",
-    // round 22: pipe_clean_corpus now consumes the shared near-dup pair
-    // artifact (same artifact as text_minhash_pairs et al.) instead of
-    // rebuilding the LSH pipeline per execution
-    "pipe_clean_corpus",
-    // round 22: trained index metadata (BQ sign thresholds, SQ8 ranges,
-    // PQ codebooks) memoized per tier like the IVF coarse codebook —
-    // stored-with-the-index artifacts, not per-query training
-    "vec_bq", "vec_ann_hamming", "vec_sq8", "vec_ann_sq", "vec_pq_codes")
+  /** The `memoized` field: queries that read a per-tier artifact of
+    * [[graft.util.Memo]] (a hit or a build) in any of their executions,
+    * as the registry's read scope recorded them. It keeps cross-engine
+    * totals interpretable: a DuckDB oracle retrains these artifacts every
+    * run, the Spark side builds them once per JVM, and the build is paid
+    * inside the same chunk's warm-up pass. */
+  private def memoizedJson(names: Iterable[String]): String =
+    names.toSeq.sorted.map("\"" + _ + "\"").mkString("\"memoized\":[", ",", "],")
 
-  private def memoizedJson(names: Seq[String]): String =
-    names.filter(MEMOIZED).sorted
-      .map("\"" + _ + "\"").mkString("\"memoized\":[", ",", "],")
+  /** Run one query execution in its own [[graft.util.CacheBin]] scope;
+    * true when it read a [[graft.util.Memo]] artifact. */
+  private[graft] def readsArtifacts(execution: => Unit): Boolean =
+    graft.util.Memo.reading(graft.util.CacheBin.withScope(execution))._2.nonEmpty
 
   private def orderedQueries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
     SparkEntry.queries.toSeq.sortBy(_._1).filterNot(q => SKIP(q._1))
@@ -184,10 +163,13 @@ object Bench {
     * that JVM startup stays ~15% of bench wall-clock. */
   private val CHUNK = 6
 
-  /** Run one chunk of queries in a child JVM; parse its per-query times
-    * plus the child's calibration-probe time. */
-  private def runGroup(g: Seq[String],
-      cp: String): Option[(Seq[(String, Double)], Option[Double])] = try {
+  /** A child's result: per-query times, its calibration-probe time and
+    * the queries it saw read a memoized artifact. */
+  private[graft] final case class Chunk(times: Seq[(String, Double)],
+      calib: Option[Double], memoized: Seq[String])
+
+  /** Run one chunk of queries in a child JVM and parse its line. */
+  private def runGroup(g: Seq[String], cp: String): Option[Chunk] = try {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val addOpens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
       "java.io", "java.net", "java.nio", "java.util", "java.util.concurrent",
@@ -214,13 +196,13 @@ object Bench {
     System.err.println(s"[bench] chunk ${g.mkString(",")} failed: ${e.getMessage}"); None
   }
 
-  /** Parse a child's JSON line into per-query times (plus the child's
-    * calibration time, when present — absence never fails the chunk: the
-    * probe is bookkeeping, not a bench result). A truncated/malformed
-    * line or a query the child dropped (bench failure) must fail the WHOLE
-    * chunk loudly (None → parent falls back), never merge partially. */
-  private[graft] def parseChunkLine(line: String,
-      g: Seq[String]): Option[(Seq[(String, Double)], Option[Double])] = {
+  /** Parse a child's JSON line into per-query times, plus the child's
+    * calibration time and `memoized` list when present (absence never
+    * fails the chunk: both are bookkeeping, not bench results). A
+    * truncated/malformed line, a query the child dropped (bench failure)
+    * or a memoized name outside the chunk must fail the WHOLE chunk loudly
+    * (None → parent falls back), never merge partially. */
+  private[graft] def parseChunkLine(line: String, g: Seq[String]): Option[Chunk] = {
     val start = line.indexOf("\"queries\":{")
     val end = line.lastIndexOf("},\"sf\"")
     if (start < 0 || end < 0 || end <= start) {
@@ -232,13 +214,17 @@ object Bench {
       .map(m => m.group(1) -> m.group(2).toDouble).toSeq
     val calib = """"calib":([0-9.]+)""".r.findFirstMatchIn(line.take(start))
       .map(_.group(1).toDouble)
+    val memoized = """"memoized":\[([^\]]*)\]""".r.findFirstMatchIn(line.take(start))
+      .toSeq.flatMap(m => """"([a-z0-9_]+)"""".r.findAllMatchIn(m.group(1)).map(_.group(1)))
     // key SET equality alone would accept a duplicated key (last-wins on
     // toMap); require exact multiplicity too
-    if (parsed.size == g.size && parsed.map(_._1).toSet == g.toSet)
-      Some((parsed, calib))
+    if (parsed.size == g.size && parsed.map(_._1).toSet == g.toSet &&
+        memoized.forall(g.contains))
+      Some(Chunk(parsed, calib, memoized))
     else {
       System.err.println(s"[bench] chunk ${g.mkString(",")}: child returned " +
-        s"${parsed.size}/${g.size} queries — treating chunk as failed")
+        s"${parsed.size}/${g.size} queries, memoized ${memoized.mkString(",")} " +
+        "— treating chunk as failed")
       None
     }
   }
@@ -258,14 +244,15 @@ object Bench {
         .flatMap { case (_, names) => names.sorted.grouped(CHUNK) }
       val parts = chunks.map { g =>
         val r = runGroup(g, cp)
-        r.foreach { case (t, c) => System.err.println(
-          s"[bench] chunk ${g.head}..${g.last}: ${t.size} queries done" +
-            c.fold("")(v => f", calib $v%.3f s")) }
+        r.foreach(c => System.err.println(
+          s"[bench] chunk ${g.head}..${g.last}: ${c.times.size} queries done" +
+            c.calib.fold("")(v => f", calib $v%.3f s")))
         r
       }
       val expected = orderedQueries.map(_._1)
-      val merged = parts.flatten.flatMap(_._1).toMap
-      val calibs = parts.flatten.flatMap(_._2)
+      val merged = parts.flatten.flatMap(_.times).toMap
+      val calibs = parts.flatten.flatMap(_.calib)
+      val memoized = parts.flatten.flatMap(_.memoized)
       if (parts.exists(_.isEmpty) || expected.exists(q => !merged.contains(q))) None
       else {
         val total = expected.map(merged).sum
@@ -276,7 +263,7 @@ object Bench {
         val calibJson =
           if (calibs.isEmpty) ""
           else s""""calib":${num(median(calibs))},"calib_min":${num(calibs.min)},"calib_max":${num(calibs.max)},"""
-        val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":$runs,"agg":"min",${calibJson}${memoizedJson(expected)}"mode":"fork-per-group","queries":$qs,"sf":"$sfDir"}"""
+        val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":$runs,"agg":"min",${calibJson}${memoizedJson(memoized)}"mode":"fork-per-group","queries":$qs,"sf":"$sfDir"}"""
         Some((line, Summary(total, Option.when(calibs.nonEmpty)(median(calibs)),
           expected.size, benchCpus)))
       }
@@ -312,8 +299,12 @@ object Bench {
         "join_interval_pairs", "text_minhash_pairs", "vec_ann_lsh",
         "text_simhash", "text_dup_clusters", "sk_heavy_hitters")
     }
+    // a query that read an artifact in any execution is `memoized`
+    val memoized = scala.collection.mutable.Set.empty[String]
+    def execute(name: String)(body: => Unit): Unit =
+      if (readsArtifacts(body)) memoized += name
     warm.foreach { q =>
-      try graft.util.CacheBin.withScope { SparkEntry.queries(q)(spark, sfDir).count() }
+      try execute(q) { SparkEntry.queries(q)(spark, sfDir).count() }
       catch { case _: Throwable => }
     }
 
@@ -341,7 +332,7 @@ object Bench {
       // time — only successful passes compete for the min, so a query that
       // throws in every pass keeps the MaxValue sentinel and gets omitted
       val ok =
-        try { graft.util.CacheBin.withScope { fn(spark, sfDir).count() }; true }
+        try { execute(name) { fn(spark, sfDir).count() }; true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
       val t = (System.nanoTime() - t0) / 1e9
@@ -356,7 +347,7 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val calibJson = calib.fold("")(c => s""""calib":${num(c)},""")
-    val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":$RUNS,"agg":"min",$calibJson${memoizedJson(results.map(_._1))}"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":$RUNS,"agg":"min",$calibJson${memoizedJson(results.map(_._1).filter(memoized))}"queries":$qs,"sf":"$sfDir"}"""
     println(line)
     if (chunk.isEmpty) { // whole-surface mode only, not per-chunk children
       writeFullLine(line)

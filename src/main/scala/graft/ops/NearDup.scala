@@ -149,7 +149,7 @@ object NearDup {
 
   /** [[pairsWithJaccard]]'s plan WITHOUT the final CacheBin registration —
     * for callers that OWN the result's lifecycle. The one such caller is
-    * the [[graft.util.ArtifactMemo]] builder (TextQueries.nearDupPairs),
+    * the [[graft.util.Memo]] frame builder (TextQueries.nearDupPairs),
     * which must persist a frame CacheBin never registered: the memo's
     * build contract is a self-contained frame that OUTLIVES the building
     * query, but `CacheBin.persist` registers into the building query's

@@ -24,9 +24,9 @@ object Quality {
     * previous chain tokenized twice via graft_words — once for n_words,
     * once for the stopword filter, each materializing the token array —
     * and ran a regexp_replace for n_punct, and the keepFlag filter plus
-    * the project each paid the whole set again). Bit-identical to
-    * [[withSignalsLegacy]] — QualitySignalsSpec pins it on adversarial
-    * inputs, every quality-gated oracle re-proves it end to end. */
+    * the project each paid the whole set again). Bit-identical to that
+    * composed form — QualitySignalsSpec pins it on adversarial inputs,
+    * every quality-gated oracle re-proves it end to end. */
   def withSignals(df: DataFrame, textCol: String = "text"): DataFrame = {
     val sig = call_function("graft_quality_signals", col(textCol),
       lit(stopwords.mkString(",")))
@@ -36,21 +36,6 @@ object Quality {
       .withColumn("n_punct", col("__qsig.n_punct"))
       .withColumn("n_chars_t", col("__qsig.n_chars_t"))
       .drop("__qsig")
-  }
-
-  /** The pre-round-22 composed-expression form of [[withSignals]] — kept
-    * as the parity oracle for QualitySignalsSpec (fused == composed on
-    * adversarial inputs) and for A/B measurement. */
-  private[graft] def withSignalsLegacy(df: DataFrame,
-      textCol: String = "text"): DataFrame = {
-    val words = call_function("graft_words", col(textCol))
-    df.withColumn("n_words", size(words).cast("long"))
-      .withColumn("stop_cnt",
-        size(filter(words, w => w.isin(stopwords: _*))).cast("long"))
-      .withColumn("n_punct",
-        (length(col(textCol)) - length(regexp_replace(col(textCol), "[.,;:!?]", "")))
-          .cast("long"))
-      .withColumn("n_chars_t", length(col(textCol)).cast("long"))
   }
 
   /** The canonical keep rule over [[withSignals]] columns: at least 20

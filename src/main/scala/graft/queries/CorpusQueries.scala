@@ -580,10 +580,9 @@ object CorpusQueries {
     * the instance frame and loses nothing: every downstream statistic is
     * an instance-count-weighted sum. In a deployed pipeline this is the
     * stored tokenized-gram table every stage reads; the LRU-bounded
-    * [[graft.util.ArtifactMemo]] is the in-JVM stand-in. */
+    * [[graft.util.Memo]] registry is the in-JVM stand-in. */
   private def gramCounts(s: SparkSession, dir: String): DataFrame =
-    graft.util.ArtifactMemo.getOrBuild(s,
-      "gram_counts|" + Q.tableKey(dir, "documents")) {
+    graft.util.Memo.frame(s, "gram_counts", Q.tableKey(dir, "documents")) {
       val g = tPar(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           call_function("graft_words", col("text")).as("words"))
@@ -607,8 +606,7 @@ object CorpusQueries {
     * c2 = Σcnt per (w1, bg) and per-doc means are cnt-weighted — integer
     * sums identical to the instance form, so the oracle is unchanged. */
   private def lmScoredDocs(s: SparkSession, dir: String): DataFrame =
-    graft.util.ArtifactMemo.getOrBuild(s,
-      "lm_scored|" + Q.tableKey(dir, "documents")) {
+    graft.util.Memo.frame(s, "lm_scored", Q.tableKey(dir, "documents")) {
       val inst = gramCounts(s, dir)
         .withColumn("w1", substring_index(col("bg"), " ", 1))
       val big = inst.groupBy("w1", "bg").agg(sum("cnt").as("c2"))

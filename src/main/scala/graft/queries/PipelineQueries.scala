@@ -42,11 +42,11 @@ object PipelineQueries {
 
   /** Clean-corpus survivors with per-stage accounting.
     *
-    * Stage 3 reads the MEMOIZED full-corpus near-dup pair artifact
+    * Stage 3 reads the memoized full-corpus near-dup pair artifact
     * ([[TextQueries.nearDupPairs]] — the (doc_a, doc_b, inter, union)
     * table a production pipeline materializes once per corpus snapshot;
-    * the same artifact text_minhash_pairs / text_dup_clusters /
-    * pipe_split_* consume, declared in Bench's `memoized` field) and
+    * the same [[graft.util.Memo]] frame text_minhash_pairs /
+    * text_dup_clusters / pipe_split_* consume) and
     * restricts it to the stage-1/2 survivors, instead of re-running the
     * shingle-hash → signature → band-join → Jaccard pipeline per
     * execution over the survivor set (round 22; the rebuild was ~60% of

@@ -125,64 +125,20 @@ object Q {
     * mirror in DuckDB with CAST(floor(epoch(ts)) AS BIGINT). */
   def epochS(c: Column): Column = unix_timestamp(c).cast("long")
 
-  /** Memoized per-tier table row count (one bounded metadata-cheap job per
-    * JVM per data fingerprint) — the embCount/bm25Totals discipline for
-    * count scalars that parameterize a query plan (gate levels, idf N
-    * literals): identical across executions against one tier in one JVM,
-    * so the job runs once, not once per bench pass. Keyed on [[tableKey]]
-    * so a tier regenerated at the same path re-counts. */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
+  /** Memoized per-tier table row count: one metadata-cheap job per JVM per
+    * data fingerprint, for count scalars that parameterize a query plan
+    * (gate levels, idf N literals). */
   def tableCount(spark: SparkSession, dir: String, name: String): Long =
-    memo(countCache, tableKey(dir, name)) {
-      java.lang.Long.valueOf(t(spark, dir, name).count())
-    }.longValue
-
-  /** Compute-once memo. A Spark job must not run INSIDE
-    * ConcurrentHashMap.computeIfAbsent — the bin lock is held for the
-    * job's whole duration (distinct keys hashing to the same bin serialize
-    * behind it, and a recursive same-key call throws
-    * IllegalStateException). So a miss first gets the lock object of
-    * (`map`, `k`) — computeIfAbsent only creates that object, it never
-    * runs the job — and computes under it: a second caller for the same key waits and reads
-    * the first one's value instead of running the same job again, and
-    * distinct keys still compute in parallel. The lock objects stay, one
-    * per key, as long as the memo entries do. A compute that throws caches
-    * nothing; the next caller computes again. */
-  def memo[K, V <: AnyRef](
-      map: java.util.concurrent.ConcurrentHashMap[K, V], k: K)(
-      compute: => V): V = {
-    val cached = map.get(k)
-    if (cached != null) cached
-    else memoLocks.computeIfAbsent(new MemoKey(map, k), _ => new Object).synchronized {
-      val raced = map.get(k)
-      if (raced != null) raced
-      else {
-        val v = compute
-        map.put(k, v)
-        v
-      }
+    graft.util.Memo.scalar("row_count", tableKey(dir, name)) {
+      t(spark, dir, name).count()
     }
-  }
 
-  /** Lock key of [[memo]]: the map by identity (its own hashCode changes
-    * as entries arrive), the key by value. */
-  private final class MemoKey(val map: AnyRef, val k: Any) {
-    override def hashCode: Int = 31 * System.identityHashCode(map) + k.##
-    override def equals(o: Any): Boolean = o match {
-      case m: MemoKey => (m.map eq map) && m.k == k
-      case _ => false
-    }
-  }
-
-  private val memoLocks = new java.util.concurrent.ConcurrentHashMap[MemoKey, AnyRef]()
-
-  /** Cache key for per-JVM memos over a tier's table: dir plus a cheap
-    * file fingerprint (names + sizes + mtimes of the parquet file set), so
-    * data regenerated AT THE SAME PATH within one JVM invalidates the memo
-    * instead of silently serving stale results. Non-local paths fall back
-    * to the dir string (single-materialization assumption applies). */
+  /** Cache key for [[graft.util.Memo]] artifacts over a tier's table: dir
+    * plus a cheap file fingerprint (names + sizes + mtimes of the parquet
+    * file set), so data regenerated AT THE SAME PATH within one JVM
+    * invalidates the memo instead of silently serving stale results.
+    * Non-local paths fall back to the dir string (single-materialization
+    * assumption applies). */
   def tableKey(dir: String, name: String): String = {
     val f = new java.io.File(s"$dir/$name.parquet")
     def sig(x: java.io.File) = s"${x.getName}:${x.length}:${x.lastModified}"

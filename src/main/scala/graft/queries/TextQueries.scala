@@ -372,12 +372,12 @@ object TextQueries {
     * jaccard) table once per corpus snapshot and every downstream consumer
     * (cluster closure, best-of-cluster, split audit/fix, retrieval-eval
     * qrels) reads it. Memoized per (session, data fingerprint) like the
-    * gram/LM/kNN/BM25 artifacts and declared in Bench's `memoized` field;
-    * built via [[graft.ops.NearDup.pairsWithJaccard]] (one (band, key)
-    * equi-join, O(dups) candidates, no O(n²) scan). */
+    * gram/LM/kNN/BM25 artifacts; built via
+    * [[graft.ops.NearDup.pairsWithJaccard]] (one (band, key) equi-join,
+    * O(dups) candidates, no O(n²) scan). */
   private[queries] def nearDupPairs(s: SparkSession, dir: String): DataFrame =
-    graft.util.ArtifactMemo.getOrBuild(s,
-      "neardup_pairs|" + graft.queries.Q.tableKey(dir, "documents")) {
+    graft.util.Memo.frame(s, "neardup_pairs",
+      graft.queries.Q.tableKey(dir, "documents")) {
       // build via pairsPlan (NOT pairsWithJaccard): the memo must own the
       // artifact's persist, so the frame is one CacheBin never registered —
       // pairsWithJaccard's final CacheBin.persist would register it into
@@ -1375,19 +1375,19 @@ object TextQueries {
   /** The memoized BM25 inverted index `(doc_id, term, tf, dl)` — THE
     * stored artifact of a retrieval pipeline (built once per corpus
     * snapshot, read by every query): memoized per (session, data
-    * fingerprint) like the gram/LM/kNN artifacts (round 19), declared in
-    * Bench's `memoized` field. Built in ONE shuffle: the per-doc length
-    * dl rides along the exploded words (narrow size() of the same split —
-    * no separate dl aggregation or join), so the index lands after a
-    * single map-side-combined groupBy. Shared by [[hybridSearch]] and
-    * [[retrievalEval]] (identical memo key → one build serves both). */
+    * fingerprint) like the gram/LM/kNN artifacts (round 19). Built in ONE
+    * shuffle: the per-doc length dl rides along the exploded words (narrow
+    * size() of the same split — no separate dl aggregation or join), so
+    * the index lands after a single map-side-combined groupBy. Shared by
+    * [[hybridSearch]] and [[retrievalEval]] (identical memo key → one
+    * build serves both). */
   private def bm25TfIndex(s: SparkSession, dir: String): DataFrame = {
     val words = tPar(s, dir, "documents").select(col("doc_id"),
       call_function("graft_words", col("text")).as("ws"))
       .select(col("doc_id"), size(col("ws")).cast("long").as("dl"),
         explode(col("ws")).as("term"))
-    graft.util.ArtifactMemo.getOrBuild(s,
-      "bm25_tf|" + graft.queries.Q.tableKey(dir, "documents")) {
+    graft.util.Memo.frame(s, "bm25_tf",
+      graft.queries.Q.tableKey(dir, "documents")) {
       val t0 = words.groupBy("doc_id", "term")
         .agg(count(lit(1)).as("tf"), min("dl").as("dl"))
       t0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1404,11 +1404,8 @@ object TextQueries {
     * pass over the tf index (two extra jobs + two 1-row broadcasts per
     * run); as literals the score expression codegens them inline. Same
     * integer values, bit-identical scores. */
-  private val bm25TotCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-
   private def bm25Totals(s: SparkSession, dir: String): (Long, Long) =
-    graft.queries.Q.memo(bm25TotCache,
+    graft.util.Memo.scalar("bm25_totals",
       graft.queries.Q.tableKey(dir, "documents")) {
       val nd = t(s, dir, "documents").count()
       val row = bm25TfIndex(s, dir).agg(sum("tf").cast("long")).head()
@@ -1417,13 +1414,6 @@ object TextQueries {
       val ltot = if (row.isNullAt(0)) 0L else row.getLong(0)
       (nd, ltot)
     }
-
-  /** Memoized probe-query ids (smallest doc_ids that have a dense vector)
-    * — the [[graft.queries.VectorQueries]] idAtRank discipline: the
-    * bounded scalar job is identical across executions against one tier
-    * in one JVM, so it runs once, not once per bench pass. */
-  private val hsProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
 
   /** The integer per-(term, doc) BM25 score — the milli-floored rational
     * arithmetic documented at [[hybridSearch]] (rounding contract mirrored
@@ -1447,13 +1437,14 @@ object TextQueries {
     val (ndTot, ltotTot) = bm25Totals(s, dir)
     // probes: smallest doc_ids that HAVE a dense vector (documents and
     // embeddings only partially overlap at some tiers) — one bounded
-    // scalar collect (the idAtRank pattern), memoized per tier and
-    // inlined as literals so neither ranking branch re-derives the probe
-    // subtree. Reads the raw id columns (t, not tPar): the probe job must
-    // not shuffle the text column it never touches
-    val probeIds = graft.queries.Q.memo(hsProbeCache,
-      graft.queries.Q.tableKey(dir, "documents") + "|" +
-        graft.queries.Q.tableKey(dir, "embeddings")) {
+    // scalar collect (the idAtRank pattern), memoized per tier (the job is
+    // identical across executions in one JVM) and inlined as literals so
+    // neither ranking branch re-derives the probe subtree. Reads the raw
+    // id columns (t, not tPar): the probe job must not shuffle the text
+    // column it never touches
+    val probeIds = graft.util.Memo.scalar("hs_probe_ids",
+      (graft.queries.Q.tableKey(dir, "documents"),
+        graft.queries.Q.tableKey(dir, "embeddings"))) {
       t(s, dir, "documents").select(col("doc_id"))
         .join(t(s, dir, "embeddings").select(col("vec_id")),
           col("doc_id") === col("vec_id"))

@@ -45,22 +45,11 @@ object VectorQueries {
   private def knnBits(n: Long): Int =
     KNN_MINB + (KNN_MINB to KNN_MAXB - 1).count(k => n > 8L * (1L << k))
 
-  private val embCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Cache key for the per-JVM embeddings memos: dir plus a cheap file
-    * fingerprint (names + sizes + mtimes of the parquet file set), so a
-    * tier regenerated AT THE SAME PATH in one JVM invalidates the memo —
-    * a stale count would silently desync [[knnBits]] from the oracle's
-    * live count(*). Non-local paths fall back to the dir string (the
-    * single-materialization assumption then applies). */
+  /** Fingerprint key of the embeddings artifacts in [[graft.util.Memo]]:
+    * a tier regenerated AT THE SAME PATH computes them again (a stale
+    * count would silently desync [[knnBits]] from the oracle's live
+    * count(*)). */
   private def embKey(dir: String): String = Q.tableKey(dir, "embeddings")
-
-  /** Memoized embeddings row count per tier (one bounded job per JVM). */
-  private def embCount(e: DataFrame, dir: String): Long =
-    Q.memo(embCountCache, embKey(dir)) {
-      java.lang.Long.valueOf(e.count())
-    }.longValue
   // ANN index configuration pinned by the oracle mirrors (annIvfSql /
   // annIvfPqSql re-derive exactly these); the parameterized overloads let
   // callers (and the recall scan) pick their own operating point
@@ -103,16 +92,8 @@ object VectorQueries {
     * or null-id table (where the SQL mirror's scalar subquery would return
     * NULL and silently filter every row) and on a duplicate id spanning
     * the rank boundary (where the selection would be nondeterministic). */
-  private val idAtRankCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), java.lang.Long]()
-
-  /** Memoized max(vec_id)+1 per tier — the planted-id offset of
-    * [[dedupRemoval]] (see there). */
-  private val maxIdCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private def idAtRank(e: DataFrame, dir: String, n: Int): Long =
-    Q.memo(idAtRankCache, (embKey(dir), n)) {
+    graft.util.Memo.scalar("id_at_rank", (embKey(dir), n)) {
       val rows = e.select(col("vec_id")).orderBy("vec_id").limit(n + 1).collect()
       require(rows.length >= n && !rows.take(n).exists(_.isNullAt(0)),
         s"idAtRank: need $n non-null vec_ids, found ${rows.length} row(s) — " +
@@ -120,8 +101,21 @@ object VectorQueries {
       require(rows.length == n || rows(n).getLong(0) != rows(n - 1).getLong(0),
         s"idAtRank: vec_id ${rows(n - 1).getLong(0)} ties at the rank-$n " +
           "boundary — vec_id must be unique for a deterministic selection")
-      java.lang.Long.valueOf(rows(n - 1).getLong(0))
-    }.longValue
+      rows(n - 1).getLong(0)
+    }
+
+  /** Memoized max(vec_id)+1 per tier — the planted-id offset of
+    * [[dedupRemoval]] and [[semDedup]]: planted ids start past the table's
+    * max id at ANY scale factor (a fixed offset would collide with real
+    * ids once the table outgrows it, silently over-dropping an innocent
+    * vector on both engines). */
+  private def plantOffset(e: DataFrame, dir: String): Long =
+    graft.util.Memo.scalar("plant_offset", embKey(dir)) {
+      val maxRow = e.agg(max("vec_id")).head()
+      require(!maxRow.isNullAt(0),
+        "embeddings table is empty — nothing to plant or dedup")
+      maxRow.getLong(0) + 1L
+    }
 
   /** SQL mirror of [[idAtRank]] (scalar subquery, n-th smallest vec_id). */
   private def idAtRankSql(n: Int): String =
@@ -318,10 +312,9 @@ object VectorQueries {
     * built once per corpus snapshot (exactly the shape the decoupled
     * LPA-stage oracle runs against — tools/LpaParity.scala). 3 rows per
     * node (k = 3), so the persisted frame is node-count-sized at any
-    * tier. Declared in Bench's `memoized` field like every artifact. */
+    * tier. */
   def knnGraph(s: SparkSession, dir: String): DataFrame =
-    graft.util.ArtifactMemo.getOrBuild(s,
-      "knn_graph|" + Q.tableKey(dir, "embeddings")) {
+    graft.util.Memo.frame(s, "knn_graph", embKey(dir)) {
       val g = knnGraphBuild(s, dir)
       g.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       g.count()
@@ -332,7 +325,7 @@ object VectorQueries {
     val e = graft.util.CacheBin.persist(tPar(s, dir, "embeddings")
       .select(col("vec_id"), vecD(col("embedding")).as("v"))
       .withColumn("n2", dot(col("v"), col("v"))))
-    val nBits = knnBits(embCount(e, dir))
+    val nBits = knnBits(Q.tableCount(s, dir, "embeddings"))
     val bandCols = (0 until KNN_BANDS).map { b =>
       struct(lit(b.toLong).as("band"),
         planeBucket(col("v"), b * KNN_MAXB, nBits).as("bkt"))
@@ -435,15 +428,12 @@ object VectorQueries {
     * bit-identical across engines. Labels ascending: codebook INDEX order
     * IS label order (what makes nearestCodes' lower-index tie-break match
     * the SQL mirror's `clabel` tie-break). Tiny by design — collected,
-    * then broadcast into narrow assignment maps. Memoized per (data
-    * fingerprint) like embCount: the four IVF-routed operators built
-    * against one tier in one JVM share one codebook job. */
-  private val codebookCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Long], Array[Array[Double]])]()
-
+    * then broadcast into narrow assignment maps. Memoized per data
+    * fingerprint: the four IVF-routed operators built against one tier in
+    * one JVM share one codebook job. */
   private def coarseCodebook(s: SparkSession,
       dir: String): (Array[Long], Array[Array[Double]]) =
-    Q.memo(codebookCache, Q.tableKey(dir, "embeddings")) {
+    graft.util.Memo.scalar("coarse_codebook", embKey(dir)) {
       coarseCodebookBuild(s, dir)
     }
 
@@ -453,24 +443,21 @@ object VectorQueries {
     * ranges (128 longs) and PQ codebooks (s·kc·sub doubles) are pure
     * deterministic functions of the corpus snapshot, stored WITH a
     * production index rather than retrained per query — so each training
-    * aggregate runs once per tier per JVM, not once per execution. Every
-    * query reading one is declared in Bench.MEMOIZED (vec_bq,
-    * vec_ann_hamming, vec_sq8, vec_ann_sq, vec_pq_codes, vec_ann_ivfpq). */
-  private val bqThCache = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.ops.Bq.Thresholds]()
+    * aggregate runs once per tier per JVM, not once per execution. Bench
+    * reports every query that reads one in its `memoized` field. */
   private def bqThresholds(e: DataFrame, dir: String): graft.ops.Bq.Thresholds =
-    Q.memo(bqThCache, embKey(dir)) { graft.ops.Bq.trainThresholds(e, "v", DIM) }
+    graft.util.Memo.scalar("bq_thresholds", embKey(dir)) {
+      graft.ops.Bq.trainThresholds(e, "v", DIM)
+    }
 
-  private val sqRangeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.ops.Sq.Ranges]()
   private def sqRanges(e: DataFrame, dir: String): graft.ops.Sq.Ranges =
-    Q.memo(sqRangeCache, embKey(dir)) { graft.ops.Sq.trainRanges(e, "v", DIM) }
+    graft.util.Memo.scalar("sq_ranges", embKey(dir)) {
+      graft.ops.Sq.trainRanges(e, "v", DIM)
+    }
 
-  private val pqCbCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Int, Int), graft.ops.Pq.Codebooks]()
   private def pqCodebooks(e: DataFrame, dir: String, s: Int, sub: Int,
       kc: Int, iters: Int): graft.ops.Pq.Codebooks =
-    Q.memo(pqCbCache, (embKey(dir), s, sub, kc, iters)) {
+    graft.util.Memo.scalar("pq_codebooks", (embKey(dir), s, sub, kc, iters)) {
       graft.ops.Pq.train(e, "vec_id", "v", s, sub, kc, iters)
     }
 
@@ -830,17 +817,7 @@ object VectorQueries {
   def dedupRemoval(s: SparkSession, dir: String): DataFrame = {
     val base = tPar(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))
-    // planted ids start past the table's max id at ANY scale factor — a
-    // fixed offset would collide with real ids once the table outgrows it,
-    // silently over-dropping an innocent vector on both engines. Memoized
-    // per tier fingerprint (r21, the idAtRank discipline): the bounded
-    // scalar job is identical across executions in one JVM
-    val off = Q.memo(maxIdCache, embKey(dir)) {
-      val maxRow = base.agg(max("vec_id")).head()
-      require(!maxRow.isNullAt(0),
-        "vec_dedup_removal: embeddings table is empty — nothing to plant or dedup")
-      java.lang.Long.valueOf(maxRow.getLong(0) + 1L)
-    }.longValue
+    val off = plantOffset(base, dir)
     val planted = base.filter(col("vec_id") <= idAtRank(base, dir, 50))
       .select((col("vec_id") + off).as("vec_id"), col("label"), col("embedding"))
     // the planted union feeds both the drop-set derivation and the
@@ -1375,10 +1352,7 @@ object VectorQueries {
     val K = 8; val T = 0.999
     val base = tPar(s, dir, "embeddings")
       .select(col("vec_id"), vecD(col("embedding")).as("v"))
-    val maxRow = base.agg(max("vec_id")).head()
-    require(!maxRow.isNullAt(0),
-      "vec_sem_dedup: embeddings table is empty — nothing to plant or dedup")
-    val off = maxRow.getLong(0) + 1L
+    val off = plantOffset(base, dir)
     val planted = base.filter(col("vec_id") <= idAtRank(base, dir, 50))
       .select((col("vec_id") + off).as("vec_id"), col("v"))
     val seeds = graft.ops.SemDedup.seedCodebook(base, "vec_id", "v", K)
@@ -1716,13 +1690,13 @@ object VectorQueries {
     val proj = tPar(s, dir, "embeddings")
       .select(col("vec_id"), transform(col("embedding"),
         x => round(x.cast("double") * 1000000).cast("long")).as("vm"))
-    // Gate on the MEMOIZED row count (free after any vec query's first
-    // touch of the tier), then collect only under the gate. The previous
+    // Gate on the memoized row count (free after any query's first count
+    // of the tier), then collect only under the gate. The previous
     // one-job limit(max+1).collect() probe shipped ~35 MB of rows to the
     // driver on ABOVE-gate tiers only to discard them and rescan
     // (ADVICE r21); the count gate costs one bounded metadata-cheap job
     // once per tier per JVM and the fetch still happens iff it is used.
-    val underGate = localMax > 0 && embCount(proj, dir) <= localMax
+    val underGate = localMax > 0 && Q.tableCount(s, dir, "embeddings") <= localMax
     if (underGate) {
       val took = proj.collect()
       require(took.nonEmpty, "vec_kcenter: empty embeddings table")

@@ -13,13 +13,13 @@ class BenchParseSpec extends AnyFunSuite {
   test("well-formed line with exactly the chunk's queries parses") {
     val line = """{"metric":"total","value":3.000,"unit":"sec","runs":3,"agg":"min","queries":{"q_a":1.250,"q_b":1.750},"sf":"/x"}"""
     assert(Bench.parseChunkLine(line, g) ===
-      Some((Seq("q_a" -> 1.25, "q_b" -> 1.75), None)))
+      Some(Bench.Chunk(Seq("q_a" -> 1.25, "q_b" -> 1.75), None, Nil)))
   }
 
   test("calibration probe time is picked up from the line head") {
     val line = """{"metric":"total","value":3.000,"unit":"sec","runs":3,"agg":"min","calib":0.462,"queries":{"q_a":1.250,"q_b":1.750},"sf":"/x"}"""
     assert(Bench.parseChunkLine(line, g) ===
-      Some((Seq("q_a" -> 1.25, "q_b" -> 1.75), Some(0.462))))
+      Some(Bench.Chunk(Seq("q_a" -> 1.25, "q_b" -> 1.75), Some(0.462), Nil)))
   }
 
   test("a query literally named calib cannot shadow the probe field") {
@@ -28,7 +28,17 @@ class BenchParseSpec extends AnyFunSuite {
     val gc = Seq("calib", "q_b")
     val line = """{"metric":"total","value":3.000,"unit":"sec","runs":3,"agg":"min","queries":{"calib":1.250,"q_b":1.750},"sf":"/x"}"""
     assert(Bench.parseChunkLine(line, gc) ===
-      Some((Seq("calib" -> 1.25, "q_b" -> 1.75), None)))
+      Some(Bench.Chunk(Seq("calib" -> 1.25, "q_b" -> 1.75), None, Nil)))
+  }
+
+  test("a child's memoized list parses, and the lists of two chunks merge") {
+    val a = Bench.parseChunkLine("""{"metric":"total","value":3.000,"unit":"sec","runs":3,"agg":"min","calib":0.462,"memoized":["q_b"],"queries":{"q_a":1.250,"q_b":1.750},"sf":"/x"}""", g)
+    assert(a === Some(Bench.Chunk(Seq("q_a" -> 1.25, "q_b" -> 1.75), Some(0.462), Seq("q_b"))))
+    val g2 = Seq("r_a", "r_b")
+    val b = Bench.parseChunkLine("""{"metric":"total","value":3.000,"unit":"sec","runs":3,"agg":"min","memoized":["r_a","r_b"],"queries":{"r_a":1.250,"r_b":1.750},"sf":"/x"}""", g2)
+    assert(Seq(a, b).flatten.flatMap(_.memoized) === Seq("q_b", "r_a", "r_b"))
+    // a name outside the chunk is garbage, not a mergeable declaration
+    assert(Bench.parseChunkLine("""{"metric":"total","value":3.000,"unit":"sec","memoized":["r_a"],"queries":{"q_a":1.250,"q_b":1.750},"sf":"/x"}""", g).isEmpty)
   }
 
   test("truncated line (no sf suffix) is rejected") {

@@ -1,11 +1,12 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pins the fused [[graft.functions.QualitySignals]] signal pass
   * bit-identical to the pre-round-22 composed chain
-  * ([[Quality.withSignalsLegacy]]: 2× graft_words + regexp_replace) on
+  * ([[QualitySignalsSpec.withSignalsLegacy]]: 2× graft_words + regexp_replace) on
   * adversarial inputs — the equivalence contract that lets every
   * quality-gated query (text_quality_score, pipe_clean_corpus,
   * pipe_apply_mix, pipe_source_mix, pipe_quality_by_source) keep its
@@ -40,7 +41,7 @@ class QualitySignalsSpec extends SparkSpec {
     val df = inputs.toDF("text")
     val cols = Seq("n_words", "stop_cnt", "n_punct", "n_chars_t")
     val fused = Quality.withSignals(df).select("text", cols: _*).collect()
-    val legacy = Quality.withSignalsLegacy(df).select("text", cols: _*).collect()
+    val legacy = QualitySignalsSpec.withSignalsLegacy(df).select("text", cols: _*).collect()
     fused.length shouldBe legacy.length
     fused.zip(legacy).foreach { case (f, l) =>
       withClue(s"input=${Option(f.getString(0)).map(_.take(60))}: ") {
@@ -58,7 +59,7 @@ class QualitySignalsSpec extends SparkSpec {
     val df = inputs.toDF("text")
     val fusedKept = Quality.withSignals(df).filter(Quality.keepFlag)
       .select("text").collect().map(_.getString(0)).toSet
-    val legacyKept = Quality.withSignalsLegacy(df).filter(Quality.keepFlag)
+    val legacyKept = QualitySignalsSpec.withSignalsLegacy(df).filter(Quality.keepFlag)
       .select("text").collect().map(_.getString(0)).toSet
     fusedKept shouldBe legacyKept
   }
@@ -69,5 +70,21 @@ class QualitySignalsSpec extends SparkSpec {
       spark.range(100).select(concat(lit("the doc. "), col("id")).as("text")))
     df.queryExecution.executedPlan.toString should include("*(1) Project")
     df.agg(sum("n_words")).head().getLong(0) should be > 0L
+  }
+}
+
+object QualitySignalsSpec {
+  /** The pre-round-22 composed-expression form of [[Quality.withSignals]],
+    * the parity oracle of this spec. */
+  def withSignalsLegacy(df: DataFrame,
+      textCol: String = "text"): DataFrame = {
+    val words = call_function("graft_words", col(textCol))
+    df.withColumn("n_words", size(words).cast("long"))
+      .withColumn("stop_cnt",
+        size(filter(words, w => w.isin(Quality.stopwords: _*))).cast("long"))
+      .withColumn("n_punct",
+        (length(col(textCol)) - length(regexp_replace(col(textCol), "[.,;:!?]", "")))
+          .cast("long"))
+      .withColumn("n_chars_t", length(col(textCol)).cast("long"))
   }
 }

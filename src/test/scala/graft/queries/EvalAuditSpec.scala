@@ -94,13 +94,13 @@ class EvalAuditSpec extends SparkSpec {
     // memo contract is a SELF-CONTAINED persisted frame: after a scoped
     // consumer runs (Bench/Verify wrap every query in withScope), the hit
     // must still carry its storage level.
-    graft.util.ArtifactMemo.invalidate(spark)
+    graft.util.Memo.invalidate(spark)
     graft.util.CacheBin.withScope {
       PipelineQueries.splitLeakage(spark, dir).count()
     }
     val art = TextQueries.nearDupPairs(spark, dir)
     art.storageLevel should not be org.apache.spark.storage.StorageLevel.NONE
-    graft.util.ArtifactMemo.invalidate(spark)
+    graft.util.Memo.invalidate(spark)
   }
 
   behavior of "pipe_split_clusters"

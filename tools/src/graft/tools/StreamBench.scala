@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
@@ -42,11 +42,11 @@ object StreamBench {
     val keys = 100000
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
+    // the engine's session base (extensions, LocalFs, shared codegen
+    // class loader), with the bench's state-store settings on top
+    val spark = graft.runner.SparkRunner.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage",
