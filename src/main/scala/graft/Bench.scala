@@ -224,7 +224,7 @@ object Bench {
     else {
       System.err.println(s"[bench] chunk ${g.mkString(",")}: child returned " +
         s"${parsed.size}/${g.size} queries, memoized ${memoized.mkString(",")} " +
-        "— treating chunk as failed")
+        "- treating chunk as failed")
       None
     }
   }
@@ -343,7 +343,7 @@ object Bench {
     // the parent's completeness check then fails the chunk loudly
     val (failed, results) = best.toSeq.partition(_._2 == Double.MaxValue)
     failed.foreach { case (k, _) =>
-      System.err.println(s"[bench] $k failed in every pass — omitted") }
+      System.err.println(s"[bench] $k failed in every pass - omitted") }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val calibJson = calib.fold("")(c => s""""calib":${num(c)},""")

@@ -33,7 +33,7 @@ object Verify {
       catch { case e: Throwable =>
         val msg = s"${e.getClass.getName}: ${e.getMessage}"
         failures(name) = msg
-        System.err.println(s"[verify] QUERY FAILED (will be red in dump): $name — $msg")
+        System.err.println(s"[verify] QUERY FAILED (will be red in dump): $name - $msg")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

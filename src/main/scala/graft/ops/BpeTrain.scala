@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.CacheBin.releaseCheckpoint
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -68,59 +69,42 @@ object BpeTrain {
         i => element_at(syms, i + 1) === lit(a) && element_at(syms, i + 2) === lit(b)))
       .otherwise(lit(false))
 
+  /** Vocabularies at or under 2^20 (freq, syms) rows run [[localMerges]]. */
+  private val LocalVocabMax = 1 << 20
+
   /** Learn `k` merge rules; returns (rank, lhs, rhs, cnt) in learning
     * order. Fails loudly if the vocabulary runs out of adjacent pairs
     * before `k` merges (corpus too small for the requested vocab).
     *
-    * DELTA-COUNTED rounds (the k=32k scale path): the pair-count frame is
-    * built ONCE from the full vocabulary, then maintained incrementally —
-    * merging (a, b) only changes the pair counts of words that contain
-    * (a, b) adjacently, so each round subtracts the affected words' old
-    * pair counts, adds their post-merge counts, and folds the (small)
-    * delta into the standing frame. Per round the full vocab pays one
-    * narrow predicate scan and the shuffles touch only the affected words
-    * plus the pre-aggregated pair frame — never the full re-explode the
-    * naive recount pays. Counts stay EXACT (integer add/subtract of exact
-    * multiset counts — BpeTrainSpec proves rank-for-rank equality with the
-    * naive recount), so the cross-engine oracle is unchanged. */
-  /** Drop the cached RDD behind an eager localCheckpoint (same rationale
-    * as DupGroups: `Dataset.unpersist` only consults the SQL cache
-    * manager, which knows nothing about checkpoint RDDs). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-
-  /** Learn `k` merges with a gated LOCAL loop (round 21 — the
-    * LabelProp/DupGroups two-path discipline): the corpus-sized work is
-    * the ONE wordFreqs groupBy either way; when the resulting vocabulary
-    * is codebook-small (≤ `localVocabMax` rows, fetched by the same
-    * one-job `limit(max+1).collect()` gate as DupGroups), the k merge
-    * rounds run on the driver over the collected (freq, syms) table —
-    * the distributed delta-counted loop paid ~3 scheduler round-trips
-    * per round (top-1 collect + two eager checkpoints) to move
-    * microseconds of counting. Above the gate the delta-counted
-    * distributed loop runs unchanged (a web-scale vocab is millions of
-    * rows). Same greedy algorithm, same (cnt desc, lhs, rhs) tie-break,
-    * same left-to-right non-overlapping fold — symbols are [a-z0-9]
-    * ASCII so driver string order == Spark UTF8 binary order —
-    * BpeTrainSpec pins local == distributed rank-for-rank. */
-  def merges(docs: DataFrame, textCol: String, k: Int,
-      localVocabMax: Long = 1L << 20): DataFrame = {
+    * The corpus-sized work is the ONE wordFreqs groupBy either way. When
+    * the resulting vocabulary is codebook-small (gated by
+    * [[LocalOrDistributed]] at [[LocalVocabMax]]), the k merge rounds run
+    * on the driver over the collected (freq, syms) table: the distributed
+    * delta-counted loop paid ~3 scheduler round-trips per round (top-1
+    * collect + two eager checkpoints) to move microseconds of counting.
+    * Above the gate the delta-counted distributed loop runs unchanged (a
+    * web-scale vocab is millions of rows). Same greedy algorithm, same
+    * (cnt desc, lhs, rhs) tie-break, same left-to-right non-overlapping
+    * fold — symbols are [a-z0-9] ASCII so driver string order == Spark
+    * UTF8 binary order — BpeTrainSpec pins local == distributed
+    * rank-for-rank. */
+  def merges(docs: DataFrame, textCol: String, k: Int): DataFrame = {
     require(k >= 1, s"BpeTrain.merges: k=$k — need at least one merge")
-    require(localVocabMax < Int.MaxValue,
-      s"localVocabMax=$localVocabMax must stay below Int.MaxValue (limit cap)")
-    val spark = docs.sparkSession
-    if (localVocabMax > 0) {
-      val took = wordFreqs(docs, textCol)
-        .limit(localVocabMax.toInt + 1).collect()
-      if (took.length <= localVocabMax) {
-        val vocab = took.map(r => (r.getLong(0), r.getSeq[String](1).toArray))
-        return localMerges(spark, vocab, k)
-      }
-    }
-    mergesDistributed(docs, textCol, k)
+    LocalOrDistributed(wordFreqs(docs, textCol), LocalVocabMax) { took =>
+      localMerges(docs.sparkSession,
+        took.map(r => (r.getLong(0), r.getSeq[String](1).toArray)), k)
+    }(mergesDistributed(docs, textCol, k))
   }
+
+  private val MergeSchema = StructType(Seq(
+    StructField("rank", LongType, nullable = false),
+    StructField("lhs", StringType, nullable = false),
+    StructField("rhs", StringType, nullable = false),
+    StructField("cnt", LongType, nullable = false)))
+
+  private def mergeFrame(spark: SparkSession,
+      out: Seq[(Long, String, String, Long)]): DataFrame =
+    LocalOrDistributed.driverFrame(spark, MergeSchema, out.map(Row.fromTuple))
 
   /** Driver-side BPE loop over the collected word-frequency table — the
     * naive per-round recount (exact; the vocab is gate-bounded). */
@@ -153,14 +137,20 @@ object BpeTrain {
         (freq, acc.toArray)
       }
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.result().map(Row.fromTuple), 1),
-      StructType(Seq(StructField("rank", LongType, nullable = false),
-        StructField("lhs", StringType, nullable = false),
-        StructField("rhs", StringType, nullable = false),
-        StructField("cnt", LongType, nullable = false))))
+    mergeFrame(spark, out.result())
   }
 
+  /** The distributed loop, DELTA-COUNTED (the k=32k scale path): the
+    * pair-count frame is built ONCE from the full vocabulary, then
+    * maintained incrementally — merging (a, b) only changes the pair
+    * counts of words that contain (a, b) adjacently, so each round
+    * subtracts the affected words' old pair counts, adds their post-merge
+    * counts, and folds the (small) delta into the standing frame. Per round the full vocab pays one
+    * narrow predicate scan and the shuffles touch only the affected words
+    * plus the pre-aggregated pair frame — never the full re-explode the
+    * naive recount pays. Counts stay EXACT (integer add/subtract of exact
+    * multiset counts — BpeTrainSpec proves rank-for-rank equality with the
+    * naive recount), so the cross-engine oracle is unchanged. */
   private def mergesDistributed(docs: DataFrame, textCol: String, k: Int): DataFrame = {
     val spark = docs.sparkSession
     // eager localCheckpoint per round, NOT persist: both frames are rebuilt
@@ -202,12 +192,7 @@ object BpeTrain {
       cur = next; pairs = nextPairs
     }
     releaseCheckpoint(cur); releaseCheckpoint(pairs)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.result().map(Row.fromTuple), 1),
-      StructType(Seq(StructField("rank", LongType, nullable = false),
-        StructField("lhs", StringType, nullable = false),
-        StructField("rhs", StringType, nullable = false),
-        StructField("cnt", LongType, nullable = false))))
+    mergeFrame(spark, out.result())
   }
 
   /** The naive full-recount trainer — every round re-explodes the whole
@@ -232,11 +217,6 @@ object BpeTrain {
       cur = next
     }
     releaseCheckpoint(cur)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.result().map(Row.fromTuple), 1),
-      StructType(Seq(StructField("rank", LongType, nullable = false),
-        StructField("lhs", StringType, nullable = false),
-        StructField("rhs", StringType, nullable = false),
-        StructField("cnt", LongType, nullable = false))))
+    mergeFrame(spark, out.result())
   }
 }

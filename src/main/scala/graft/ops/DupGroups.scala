@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import graft.util.CacheBin.releaseCheckpoint
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Duplicate-cluster discovery: connected components over the near-duplicate
   * pair graph — the step every large-scale dedup pipeline runs AFTER LSH
@@ -46,14 +48,6 @@ object DupGroups {
   final case class ConvergenceCapException(message: String)
       extends RuntimeException(message)
 
-  /** Drop the cached RDD behind an eager localCheckpoint. Plain
-    * `Dataset.unpersist` only consults the SQL cache manager, which knows
-    * nothing about checkpoint RDDs — reach through the LogicalRDD instead. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   /** Register `df`'s checkpoint storage with the caller's CacheBin scope. */
   private def releaseWithScope(df: DataFrame): DataFrame = {
     graft.util.CacheBin.registerRelease(df.sparkSession)(() => releaseCheckpoint(df))
@@ -67,8 +61,8 @@ object DupGroups {
     * (HDFS/S3 on a cluster); rounds then survive executor loss. Reliable
     * checkpoint files are reclaimed by Spark's ContextCleaner
     * (`spark.cleaner.referenceTracking.cleanCheckpoints`) or by removing
-    * the checkpoint dir; [[releaseCheckpoint]] still drops the block-cache
-    * copy either way. */
+    * the checkpoint dir; [[graft.util.CacheBin.releaseCheckpoint]] still
+    * drops the block-cache copy either way. */
   private def chk(df: DataFrame, reliable: Boolean): DataFrame =
     if (reliable) {
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
@@ -212,16 +206,18 @@ object DupGroups {
       .distinct()
   }
 
-  /** Diameter-bound propagation with automatic fallback and a gated LOCAL
-    * path: pair graphs at or under `localEdgeMax` edges collect to the
-    * driver and run a union-find (the [[LabelProp]]/[[PageRank]] two-path
-    * discipline — distributed fixpoint rounds over a few thousand pairs
-    * pay per-round scheduler latency plus a localCheckpoint job each to
-    * move microseconds of pointer-chasing; measured 2.3 s → ~1 s on
-    * pipe_split_clusters at sf0.1). 2^20 edges is 16 MB collected — the
-    * same gate constant LabelProp carries, conservative by ~2× against
-    * its measured crossover (SCALE.md §4). Pass `localEdgeMax = 0` to
-    * force the distributed rounds.
+  /** Pair graphs at or under this many edges run [[localComponents]].
+    * Distributed fixpoint rounds over a few thousand pairs pay per-round
+    * scheduler latency plus a localCheckpoint job each to move microseconds
+    * of pointer-chasing (measured 2.3 s → ~1 s on pipe_split_clusters at
+    * sf0.1). 2^20 edges is 16 MB collected, the same constant LabelProp
+    * carries, conservative by ~2× against its measured crossover (SCALE.md
+    * §4). */
+  private val LocalEdgeMax = 1 << 20
+
+  /** Diameter-bound propagation with automatic fallback and a driver-local
+    * path for small pair graphs (gated by [[LocalOrDistributed]] at
+    * [[LocalEdgeMax]]): a driver union-find.
     *
     * Above the gate: runs [[connectedComponents]] (optimal for the dense
     * near-clique graphs dedup thresholds produce — 2-4 rounds) and, if a
@@ -231,27 +227,16 @@ object DupGroups {
     * non-self-loop edges — DupGroupsSpec pins local == distributed), so
     * the output is identical whichever runs. */
   def connectedComponentsAuto(edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25, reliable: Boolean = false,
-      localEdgeMax: Long = 1L << 20): DataFrame = {
-    require(localEdgeMax < Int.MaxValue,
-      s"localEdgeMax=$localEdgeMax must stay below Int.MaxValue (limit cap)")
+      maxIter: Int = 25, reliable: Boolean = false): DataFrame = {
     val fwd = edges.select(col(aCol).cast("long").as("src"),
         col(bCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-    // GATE AND FETCH IN ONE JOB: limit(max+1).collect() is an incremental
-    // executeTake — if it returns ≤ max rows it returned the WHOLE edge
-    // set (which subset arrives when there are more is irrelevant: the
-    // overflow row alone routes to the distributed path). No count pass,
-    // no persist, no extra scheduler round-trips on the small path.
-    val took =
-      if (localEdgeMax > 0) fwd.limit(localEdgeMax.toInt + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (localEdgeMax > 0 && took.length <= localEdgeMax) localComponents(edges.sparkSession, took)
-    else
+    LocalOrDistributed(fwd, LocalEdgeMax)(localComponents(edges.sparkSession, _)) {
       try connectedComponents(fwd, "src", "dst", maxIter, reliable)
       catch { case _: ConvergenceCapException =>
         connectedComponentsLogN(fwd, "src", "dst", reliable = reliable)
       }
+    }
   }
 
   /** Driver-side union-find over collected (src, dst) edge rows —
@@ -259,7 +244,7 @@ object DupGroups {
     * exact fixpoint the distributed paths compute, order-independent).
     * Output rows sorted by id, one partition: bit-deterministic. */
   private def localComponents(spark: org.apache.spark.sql.SparkSession,
-      edgeRows: Array[org.apache.spark.sql.Row]): DataFrame = {
+      edgeRows: Array[Row]): DataFrame = {
     val parent = new scala.collection.mutable.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -275,15 +260,10 @@ object DupGroups {
       val (ra, rb) = (find(a), find(b))
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    val rows = parent.keysIterator.toArray.sorted
-      .map(id => org.apache.spark.sql.Row(id, find(id)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toList, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("comp",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+    val rows = parent.keysIterator.toArray.sorted.map(id => Row(id, find(id)))
+    LocalOrDistributed.driverFrame(spark, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("comp", LongType, nullable = false))), rows.toSeq)
   }
 
   /** Cluster summary of a near-dup pair list: one row per duplicate cluster

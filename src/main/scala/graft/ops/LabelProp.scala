@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Synchronous weighted LABEL PROPAGATION (Raghavan, Albert, Kumara 2007)
   * over a weighted edge frame, made deterministic: every node starts as
@@ -14,10 +14,10 @@ import org.apache.spark.sql.types.LongType
   * count — not "until converged" — is what makes the output well-defined:
   * synchronous LPA can 2-cycle on bipartite-ish structure.
   *
-  * Two execution paths, SAME rule (spec-asserted equal):
-  *  - **local**: when the edge frame is codebook-small (≤ `localEdgeMax`
-  *    edges, Long-keyed), collect the adjacency and iterate on the driver
-  *    — the [[PageRank]] discipline: distributed rounds over a few
+  * Two execution paths, SAME rule (spec-asserted equal), chosen by
+  * [[LocalOrDistributed]] at [[LabelProp.LocalEdgeMax]] edges and nodes:
+  *  - **local**: when a Long-keyed graph is codebook-small, collect the
+  *    adjacency and iterate on the driver: distributed rounds over a few
   *    thousand edges pay per-round scheduler latency to move microseconds
   *    of arithmetic (measured 7.5 s → sub-second at sf0.1).
   *  - **distributed**: each round is one hash join of the edge frame with
@@ -27,27 +27,30 @@ import org.apache.spark.sql.types.LongType
   */
 object LabelProp {
 
+  /** 2^20 rows per probed frame: 16 MB of edges collected, conservative
+    * by ~2× against the measured crossover (SCALE.md §4). */
+  private val LocalEdgeMax = 1 << 20
+
   /** nodes(node) + edges(u, v, w) → (node, lbl) after `iters` rounds.
     * Edges are taken as DIRECTED influence v → u's vote (symmetrize
-    * upstream for undirected semantics). Pass `localEdgeMax = 0` to force
-    * the distributed rounds. */
-  def run(nodes: DataFrame, edges: DataFrame, iters: Int,
-      localEdgeMax: Long = 1L << 20): DataFrame = {
-    val e = graft.util.CacheBin.persist(
-      edges.select(col("u"), col("v"), col("w").cast("long").as("w"))
-        .filter(col("w") > 0))
-    val isLong = e.schema("u").dataType == LongType &&
-      nodes.schema("node").dataType == LongType
-    if (isLong && localEdgeMax > 0 && e.count() <= localEdgeMax &&
-        nodes.count() <= localEdgeMax)
-      runLocal(nodes, e, iters)
-    else runDistributed(nodes, e, iters)
+    * upstream for undirected semantics). */
+  def run(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
+    val e = edges.select(col("u"), col("v"), col("w").cast("long").as("w"))
+      .filter(col("w") > 0)
+    def distributed = runDistributed(nodes, graft.util.CacheBin.persist(e), iters)
+    if (e.schema("u").dataType != LongType || nodes.schema("node").dataType != LongType)
+      distributed
+    else
+      LocalOrDistributed(e, LocalEdgeMax) { edgeRows =>
+        LocalOrDistributed(nodes.select("node"), LocalEdgeMax)(
+          runLocal(nodes.sparkSession, edgeRows, _, iters))(distributed)
+      }(distributed)
   }
 
-  private def runLocal(nodes: DataFrame, e: DataFrame, iters: Int): DataFrame = {
-    val spark = e.sparkSession
-    val edgeRows = e.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val nodeIds = nodes.select("node").collect().map(_.getLong(0))
+  private def runLocal(spark: org.apache.spark.sql.SparkSession,
+      edges: Array[Row], nodes: Array[Row], iters: Int): DataFrame = {
+    val edgeRows = edges.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val nodeIds = nodes.map(_.getLong(0))
     val adj = edgeRows.groupBy(_._1).view
       .mapValues(_.map(t => (t._2, t._3))).toMap
     var lbl: Map[Long, Long] = nodeIds.map(n => n -> n).toMap
@@ -74,12 +77,10 @@ object LabelProp {
       }.toMap
       i += 1
     }
-    val rows = nodeIds.sorted.map(n => org.apache.spark.sql.Row(n, lbl(n)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toList, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("lbl", LongType, nullable = false))))
+    LocalOrDistributed.driverFrame(spark, StructType(Seq(
+      StructField("node", LongType, nullable = false),
+      StructField("lbl", LongType, nullable = false))),
+      nodeIds.sorted.map(n => Row(n, lbl(n))).toSeq)
   }
 
   /** One caveat mirrored EXACTLY by the local path: a node with no

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import graft.util.CacheBin.releaseCheckpoint
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** PageRank (Page, Brin, Motwani, Winograd 1999, "The PageRank citation
   * ranking") over a weighted edge frame — in EXACT integer arithmetic so
@@ -22,12 +24,13 @@ import org.apache.spark.sql.functions._
   * nodes), rather than overflowing once rank concentration × max weight
   * crossed 2^63.
   *
-  * Two execution paths, SAME arithmetic (spec-asserted equal):
-  *  - **local**: when the edge frame is codebook-small (≤ `localEdgeMax`),
-  *    collect it and iterate on the driver — the pattern every tiny
-  *    iterative structure here uses (k-means centroids, PQ codebooks):
-  *    10 distributed rounds over a 25-node graph would pay 10 scheduler
-  *    round-trips to move microseconds of arithmetic.
+  * Two execution paths, SAME arithmetic (spec-asserted equal), chosen by
+  * [[LocalOrDistributed]] at [[PageRank.LocalEdgeMax]] edges:
+  *  - **local**: collect the codebook-small edge frame and iterate on the
+  *    driver — the pattern every tiny iterative structure here uses
+  *    (k-means centroids, PQ codebooks): 10 distributed rounds over a
+  *    25-node graph would pay 10 scheduler round-trips to move
+  *    microseconds of arithmetic.
   *  - **distributed**: each round is one equi-join of the rank frame
   *    against the persisted edges plus a map-side-combined groupBy on dst
   *    (the O(iters)-round structure of connected components, [[DupGroups]])
@@ -35,45 +38,35 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
+  /** 2^20 edges (a few MB collected), the LabelProp/DupGroups constant. */
+  private val LocalEdgeMax = 1 << 20
+
   /** edges(src, dst, w) → (node, rnk) after `iters` damped rounds.
     * dampPct/100 is the damping factor (default 85/100).
     * `checkpointEvery` bounds distributed plan depth (measured at sf0.1
     * the cadence barely moves the bench: 4.4 s @1, 4.5 s @2, 5.4 s @5 —
-    * the floor is fixed per-round scheduling, hence the local path).
-    * `localEdgeMax` gates the collected path; pass 0 to force the
-    * distributed rounds. */
+    * the floor is fixed per-round scheduling, hence the local path). */
   def run(edges: DataFrame, iters: Int = 10, dampPct: Long = 85L,
-      checkpointEvery: Int = 2, localEdgeMax: Long = 1L << 20): DataFrame = {
+      checkpointEvery: Int = 2): DataFrame = {
     // zero/negative-weight edges are dropped up front: they contribute no
     // rank, and a node whose edges were ALL zero-weight must count as
     // dangling (otherwise its wsum=0 divides: ArithmeticException on the
     // local path, silent null-skip on the distributed one — divergent)
     val e0 = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .filter(col("w") > 0)
-    // GATE AND FETCH IN ONE JOB (the DupGroups/BpeTrain limit-probe
-    // discipline, round 22): ≤ max rows back means the whole edge set
-    // arrived. The previous persist + count + collect shape paid a full
-    // materialization pass plus a cache write/read round-trip before the
-    // local loop even started; the probe is one executeTake. Above the
-    // gate the probe's rows are discarded (bounded by localEdgeMax) and
-    // the distributed path persists + counts as before. A gate at or above
-    // Int.MaxValue ("always local") is clamped to what a limit can take.
-    if (localEdgeMax > 0) {
-      val probe = math.min(localEdgeMax, Int.MaxValue - 1L).toInt
-      val took = e0.limit(probe + 1).collect()
-      if (took.length <= probe) return runLocal(e0, took, iters, dampPct)
+    LocalOrDistributed(e0, LocalEdgeMax)(runLocal(e0, _, iters, dampPct)) {
+      val e = e0.persist()
+      e.count() // materializes the persist for the distributed rounds
+      runDistributed(e, iters, dampPct, checkpointEvery)
     }
-    val e = e0.persist()
-    e.count() // materializes the persist for the distributed rounds
-    runDistributed(e, iters, dampPct, checkpointEvery)
   }
 
   /** Driver-side fixpoint for codebook-small graphs — identical integer
-    * recurrence, bounded by `localEdgeMax` rows (few MB), one collect.
+    * recurrence, bounded by [[LocalEdgeMax]] rows (few MB), one collect.
     * Generic over the node column type: nodes are carried as opaque keys
     * and the output frame reuses the input's src/dst DataType, so an
     * integer-keyed graph takes the same path a string-keyed one does. */
-  private def runLocal(e: DataFrame, took: Array[org.apache.spark.sql.Row],
+  private def runLocal(e: DataFrame, took: Array[Row],
       iters: Int, dampPct: Long): DataFrame = {
     val spark = e.sparkSession
     val nodeType = e.schema("src").dataType
@@ -95,24 +88,10 @@ object PageRank {
       r = nodes.map(n => n -> (base + inflow.getOrElse(n, 0L))).toMap
       i += 1
     }
-    val rows = nodes.map(n => org.apache.spark.sql.Row(n, r(n)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toList, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("rnk",
-          org.apache.spark.sql.types.LongType))))
+    LocalOrDistributed.driverFrame(spark, StructType(Seq(
+      StructField("node", nodeType), StructField("rnk", LongType))),
+      nodes.map(n => Row(n, r(n))))
   }
-
-  /** Drop the cached RDD behind an eager localCheckpoint. Plain
-    * `Dataset.unpersist` only consults the SQL cache manager, which knows
-    * nothing about checkpoint RDDs — reach through the LogicalRDD instead
-    * (same pattern as [[DupGroups]]; without it stale checkpoint blocks
-    * sit in executor storage until the ContextCleaner happens to GC). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   private def runDistributed(e: DataFrame, iters: Int, dampPct: Long,
       checkpointEvery: Int): DataFrame = {

@@ -20,23 +20,14 @@ object CorpusQueries {
   private def polyHashSql(w: String): String =
     s"list_reduce(list_prepend(0::BIGINT, list_transform(string_split($w,''), c -> ascii(c)::BIGINT)), (a,x) -> (a*31+x) % 1000000007)"
 
-  /** Top-3 terms per document by integer-scaled tf·idf (score desc, term
-    * asc). Shape at scale: one narrow explode, two groupBys (term counts are
-    * map-side combined), and a SIZE-GATED join of the per-term df table
-    * (broadcast under [[vocabBroadcastMaxRows]], term-shuffled above it) —
-    * the same inverted-index construction pattern as any search indexer. */
-  def tfidf(s: SparkSession, dir: String): DataFrame =
-    tfidfGated(s, dir, vocabBroadcastMaxRows)
-
   /** Broadcast gate for the per-term df table: vocabulary GROWS with corpus
     * size (Heaps' law — a 100 TB crawl's token vocabulary runs to billions
     * of rows), so a forced vocab broadcast is the same scale-killer class
-    * as pipe_split_clusters' component table (round 20, VERDICT r19 #1
-    * sweep). 10 M (term, df) rows ≈ a few hundred MB encoded — safely
-    * inside the 8 GB cap; above it the scoring join shuffles on term and
-    * the per-doc window repartitions back (the necessary cost once the df
-    * table is no longer broadcastable). */
-  private[queries] val vocabBroadcastMaxRows = 10000000L
+    * as pipe_split_clusters' component table. 10 M (term, df) rows ≈ a few
+    * hundred MB encoded — safely inside the 8 GB cap; above it the scoring
+    * join shuffles on term and the per-doc window repartitions back (the
+    * necessary cost once the df table is no longer broadcastable). */
+  private val vocabBroadcastMaxRows = 10000000L
 
   /** Below this many documents the vocabulary cannot approach the row
     * gate (a corpus this small tops out at a few million distinct terms),
@@ -45,8 +36,14 @@ object CorpusQueries {
     * at bench scale instead of a full vocab aggregation pass. */
   private val vocabGateMaxDocs = 100000L
 
-  private[queries] def tfidfGated(s: SparkSession, dir: String,
-      broadcastMaxRows: Long): DataFrame = {
+  /** Top-3 terms per document by integer-scaled tf·idf (score desc, term
+    * asc). Shape at scale: one narrow explode, two groupBys (term counts are
+    * map-side combined), and a SIZE-GATED join of the per-term df table
+    * (broadcast under [[vocabBroadcastMaxRows]] through
+    * [[graft.ops.LocalOrDistributed.broadcastIfAtMost]], term-shuffled
+    * above it) — the same inverted-index construction pattern as any
+    * search indexer. */
+  def tfidf(s: SparkSession, dir: String): DataFrame = {
     val docs = tPar(s, dir, "documents")
     // ONE shuffle of the exploded words, on doc_id alone: hash-partitioning
     // by doc_id satisfies the (doc_id, term) groupBy's distribution AND the
@@ -69,20 +66,13 @@ object CorpusQueries {
     // the vocabulary at all; past that, the df frame is persisted and
     // counted exactly (the count materializes the same aggregation the
     // scoring join reads — unpersisted, the gate paid the vocab
-    // aggregation twice: measured 1.6 → 2.8 s at sf0.1 on the first
-    // cut). broadcastMaxRows = 0 disables BOTH levels (the fallback-path
-    // spec's hook), and the doc-count short-circuit applies only at the
-    // DEFAULT row gate or looser — a caller passing a tighter cap
-    // (broadcastMaxRows < vocabBroadcastMaxRows) asked for an exact
-    // count, not a heuristic (ADVICE r20).
+    // aggregation twice: measured 1.6 → 2.8 s at sf0.1 on the first cut)
     val dfreqPlan = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val dfr =
-      if (broadcastMaxRows >= vocabBroadcastMaxRows &&
-          nd0 <= vocabGateMaxDocs) broadcast(dfreqPlan)
-      else {
-        val dfreq = graft.util.CacheBin.persist(dfreqPlan)
-        if (dfreq.count() <= broadcastMaxRows) broadcast(dfreq) else dfreq
-      }
+      if (!graft.ops.LocalOrDistributed.forced && nd0 <= vocabGateMaxDocs)
+        broadcast(dfreqPlan)
+      else graft.ops.LocalOrDistributed.broadcastIfAtMost(
+        graft.util.CacheBin.persist(dfreqPlan), vocabBroadcastMaxRows)
     val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
     tf.join(dfr, "term")
       .withColumn("score", col("tf") * expr(s"(${nd0}L * 1000000) div df"))

@@ -191,13 +191,14 @@ object GraphQueries {
     * trade → one blob or all singletons at any sparsification); the kNN
     * graph is where community structure actually lives.
     *
-    * Scale shape ([[graft.ops.LabelProp]], the PageRank two-path
-    * discipline): codebook-small graphs collect the adjacency and iterate
-    * on the driver (4 distributed rounds over ≤3n edges paid ~7 s of
-    * per-round scheduler latency at sf0.1 for microseconds of math);
-    * large graphs run each round as one edge-sized hash join + one
-    * node-keyed argmax window — O(rounds) shuffles, no per-node neighbor
-    * lists collected, spec-asserted equal to the local path. */
+    * Scale shape ([[graft.ops.LabelProp]], gated by
+    * [[graft.ops.LocalOrDistributed]]): codebook-small graphs collect the
+    * adjacency and iterate on the driver (4 distributed rounds over ≤3n
+    * edges paid ~7 s of per-round scheduler latency at sf0.1 for
+    * microseconds of math); large graphs run each round as one edge-sized
+    * hash join + one node-keyed argmax window — O(rounds) shuffles, no
+    * per-node neighbor lists collected, spec-asserted equal to the local
+    * path. */
   def communities(s: SparkSession, dir: String): DataFrame =
     communitiesFrom(s, dir, VectorQueries.knnGraph(s, dir))
 

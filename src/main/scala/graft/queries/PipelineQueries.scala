@@ -625,6 +625,12 @@ object PipelineQueries {
        |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
 
+  /** Broadcast gate for [[splitClusters]]'s component table: (id, comp) is
+    * two longs ≈ 16 B/row plus row overhead, so 50 M rows is ~1–2 GB
+    * broadcast-encoded — comfortably inside the 8 GB hard cap and typical
+    * executor headroom, while anything bigger is better shuffled. */
+  private val clusterBroadcastMaxRows = 50000000L
+
   /** CLUSTER-CONSISTENT SPLIT ASSIGNMENT — the FIX the leakage audit
     * ([[splitLeakage]]) points to: a doc's split is keyed by its near-dup
     * COMPONENT's canonical id (min member; singletons key by their own
@@ -640,36 +646,25 @@ object PipelineQueries {
     * shuffle) — but at crawl-typical dup rates (30–50% of documents sit in
     * near-dup clusters) it is corpus-order, hundreds of GB at 100 TB, and
     * a forced broadcast dies at Spark's 8 GB cap. The join is therefore
-    * SIZE-GATED (round 20, VERDICT r19 #1): the component frame is already
-    * materialized (lineage-cut loop inside connectedComponentsAuto), so
-    * one cheap cached count decides — ≤ [[clusterBroadcastMaxRows]] rows
-    * broadcasts, above it the hint is omitted and the left join shuffles
-    * both sides on `doc_id` (sort-merge/AQE — the right plan when the dup
-    * table is corpus-order anyway). Both paths are bit-identical
-    * (EvalAuditSpec proves it); components come from the banding-bounded
-    * pair frame via [[graft.ops.DupGroups.connectedComponentsAuto]]; the
-    * split is the same pure key function as [[splitAssign]], applied to
-    * the canonical key. */
-  def splitClusters(s: SparkSession, dir: String): DataFrame =
-    splitClustersGated(s, dir, clusterBroadcastMaxRows)
-
-  /** Broadcast gate for [[splitClusters]]'s component table: (id, comp) is
-    * two longs ≈ 16 B/row plus row overhead, so 50 M rows is ~1–2 GB
-    * broadcast-encoded — comfortably inside the 8 GB hard cap and typical
-    * executor headroom, while anything bigger is better shuffled. */
-  private[queries] val clusterBroadcastMaxRows = 50000000L
-
-  private[queries] def splitClustersGated(s: SparkSession, dir: String,
-      broadcastMaxRows: Long): DataFrame = {
+    * SIZE-GATED through [[graft.ops.LocalOrDistributed.broadcastIfAtMost]]
+    * at [[clusterBroadcastMaxRows]] rows: above it the hint is omitted and
+    * the left join shuffles both sides on `doc_id` (sort-merge/AQE — the
+    * right plan when the dup table is corpus-order anyway). Both paths are
+    * bit-identical (EvalAuditSpec proves it); components come from the
+    * banding-bounded pair frame via
+    * [[graft.ops.DupGroups.connectedComponentsAuto]]; the split is the
+    * same pure key function as [[splitAssign]], applied to the canonical
+    * key. */
+  def splitClusters(s: SparkSession, dir: String): DataFrame = {
     val docs = tPar(s, dir, "documents")
     val near = TextQueries.nearDupPairs(s, dir)
       .filter(col("inter_cnt") * 10L >= col("union_cnt") * 7L)
     val members = graft.ops.DupGroups
       .connectedComponentsAuto(near, "doc_a", "doc_b") // (id, comp)
-    // the components frame is checkpoint-materialized: this count reads
-    // cached blocks, never recomputes the fixpoint loop
-    val m = if (members.count() <= broadcastMaxRows) broadcast(members)
-            else members
+    // the components frame is already materialized (checkpointed, or built
+    // on the driver): the gate's count never recomputes the fixpoint loop
+    val m = graft.ops.LocalOrDistributed.broadcastIfAtMost(members,
+      clusterBroadcastMaxRows)
     docs.select(col("doc_id"), col("n_chars"))
       .join(m, col("doc_id") === col("id"), "left")
       .withColumn("split", graft.ops.SplitAssign.assign(

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.ops.LocalOrDistributed
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Q._
@@ -1669,101 +1670,98 @@ object VectorQueries {
     * micro-unit projection; at 100 TB with large k you'd switch to the
     * batched variant (pick p centers per round from the per-partition
     * top-p) — same plan shape, k/p rounds. */
-  def kcenterSample(s: SparkSession, dir: String): DataFrame =
-    kcenterSample(s, dir, KC_LOCAL_MAX)
-
-  /** Rows at or under which the micro-unit projection collects to the
-    * driver and the k greedy rounds run locally (the DupGroups/BpeTrain
-    * two-path discipline): each distributed round is a full orderBy-top-1
-    * job whose plan GROWS a nested `least(d2...)` chain (a fresh codegen
-    * compile per round) — at bench scale 9 scheduler round-trips move
-    * microseconds of integer arithmetic. 2^16 rows × (64 longs + id) ≈
-    * 35 MB collected — comfortably driver-bounded; above the gate the
-    * k-round distributed loop runs unchanged (a 100× tier's 500 k rows
-    * takes that path). Both paths are the same exact int64 arithmetic
-    * (greedy max-min, ties → smallest vec_id) — KcenterSpec pins them
-    * row-identical. */
-  private val KC_LOCAL_MAX = 1 << 16
-
-  private[queries] def kcenterSample(s: SparkSession, dir: String,
-      localMax: Int): DataFrame = {
+  def kcenterSample(s: SparkSession, dir: String): DataFrame = {
     val proj = tPar(s, dir, "embeddings")
       .select(col("vec_id"), transform(col("embedding"),
         x => round(x.cast("double") * 1000000).cast("long")).as("vm"))
-    // Gate on the memoized row count (free after any query's first count
-    // of the tier), then collect only under the gate. The previous
-    // one-job limit(max+1).collect() probe shipped ~35 MB of rows to the
-    // driver on ABOVE-gate tiers only to discard them and rescan
-    // (ADVICE r21); the count gate costs one bounded metadata-cheap job
-    // once per tier per JVM and the fetch still happens iff it is used.
-    val underGate = localMax > 0 && Q.tableCount(s, dir, "embeddings") <= localMax
-    if (underGate) {
-      val took = proj.collect()
-      require(took.nonEmpty, "vec_kcenter: empty embeddings table")
-      val ids = took.map(_.getLong(0))
-      val vms = took.map(_.getSeq[Long](1).toArray)
-      val n = ids.length
-      def d2At(i: Int, c: Array[Long]): Long = {
-        val v = vms(i); var acc = 0L; var d = 0
-        while (d < v.length) { val x = v(d) - c(d); acc += x * x; d += 1 }
-        acc
-      }
-      // first center = smallest vec_id; then k-1 farthest-point rounds
-      var firstIdx = 0
-      var i = 1
-      while (i < n) { if (ids(i) < ids(firstIdx)) firstIdx = i; i += 1 }
-      var selected = Vector((ids(firstIdx), 0L))
-      var center = vms(firstIdx)
-      val mind = Array.tabulate(n)(j => d2At(j, center))
-      for (_ <- 1 until KC_K) {
-        var best = 0
-        var j = 1
-        while (j < n) {
-          // max mind, ties -> smallest vec_id (the orderBy(mind desc, id))
-          if (mind(j) > mind(best) ||
-              (mind(j) == mind(best) && ids(j) < ids(best))) best = j
-          j += 1
-        }
-        require(mind(best) > 0L,
-          s"vec_kcenter: fewer than $KC_K distinct vectors — selection would repeat")
-        selected :+= ((ids(best), mind(best)))
-        center = vms(best)
-        j = 0
-        while (j < n) {
-          val d = d2At(j, center)
-          if (d < mind(j)) mind(j) = d
-          j += 1
-        }
-      }
-      import s.implicits._
-      selected.zipWithIndex
-        .map { case ((id, mn), r) => (r.toLong, id, mn) }
-        .toDF("rank", "vec_id", "mind")
-        .orderBy("rank")
-    } else {
-      val base = graft.util.CacheBin.persist(proj)
-      def d2(v: Column, c: Seq[Long]): Column =
-        aggregate(zip_with(v, typedlit(c), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x)
-      val first = base.orderBy("vec_id").limit(1).collect()
-      require(first.nonEmpty, "vec_kcenter: empty embeddings table")
-      var selected = Vector((first(0).getLong(0), 0L))
-      var centerVm = first(0).getSeq[Long](1)
-      var cur = base.withColumn("mind", d2(col("vm"), centerVm))
-      for (_ <- 1 until KC_K) {
-        val row = cur.orderBy(col("mind").desc, col("vec_id")).limit(1).collect()(0)
-        require(row.getLong(2) > 0L,
-          s"vec_kcenter: fewer than $KC_K distinct vectors — selection would repeat")
-        selected :+= ((row.getLong(0), row.getLong(2)))
-        centerVm = row.getSeq[Long](1)
-        cur = cur.withColumn("mind", least(col("mind"), d2(col("vm"), centerVm)))
-      }
-      import s.implicits._
-      selected.zipWithIndex
-        .map { case ((id, mind), r) => (r.toLong, id, mind) }
-        .toDF("rank", "vec_id", "mind")
-        .orderBy("rank")
+    // The memoized row count (free after any query's first count of the
+    // tier) settles above-gate tiers without the gate's probe, which would
+    // ship ~35 MB of rows to the driver only to discard them (ADVICE r21).
+    if (LocalOrDistributed.forced || Q.tableCount(s, dir, "embeddings") > KC_LOCAL_MAX)
+      kcenterDistributed(s, proj)
+    else
+      LocalOrDistributed(proj, KC_LOCAL_MAX)(kcenterLocal(s, _))(kcenterDistributed(s, proj))
+  }
+
+  /** Rows at or under which the micro-unit projection collects to the
+    * driver and the k greedy rounds run locally: each distributed round is
+    * a full orderBy-top-1 job whose plan GROWS a nested `least(d2...)`
+    * chain (a fresh codegen compile per round) — at bench scale 9
+    * scheduler round-trips move microseconds of integer arithmetic. 2^16
+    * rows × (64 longs + id) ≈ 35 MB collected — comfortably
+    * driver-bounded; a 100× tier's 500 k rows takes the distributed loop.
+    * Both paths are the same exact int64 arithmetic (greedy max-min, ties
+    * → smallest vec_id) — RetrievalGraphSpec pins them row-identical. */
+  private val KC_LOCAL_MAX = 1 << 16
+
+  private def kcenterLocal(s: SparkSession, took: Array[Row]): DataFrame = {
+    require(took.nonEmpty, "vec_kcenter: empty embeddings table")
+    val ids = took.map(_.getLong(0))
+    val vms = took.map(_.getSeq[Long](1).toArray)
+    val n = ids.length
+    def d2At(i: Int, c: Array[Long]): Long = {
+      val v = vms(i); var acc = 0L; var d = 0
+      while (d < v.length) { val x = v(d) - c(d); acc += x * x; d += 1 }
+      acc
     }
+    // first center = smallest vec_id; then k-1 farthest-point rounds
+    var firstIdx = 0
+    var i = 1
+    while (i < n) { if (ids(i) < ids(firstIdx)) firstIdx = i; i += 1 }
+    var selected = Vector((ids(firstIdx), 0L))
+    var center = vms(firstIdx)
+    val mind = Array.tabulate(n)(j => d2At(j, center))
+    for (_ <- 1 until KC_K) {
+      var best = 0
+      var j = 1
+      while (j < n) {
+        // max mind, ties -> smallest vec_id (the orderBy(mind desc, id))
+        if (mind(j) > mind(best) ||
+            (mind(j) == mind(best) && ids(j) < ids(best))) best = j
+        j += 1
+      }
+      require(mind(best) > 0L,
+        s"vec_kcenter: fewer than $KC_K distinct vectors — selection would repeat")
+      selected :+= ((ids(best), mind(best)))
+      center = vms(best)
+      j = 0
+      while (j < n) {
+        val d = d2At(j, center)
+        if (d < mind(j)) mind(j) = d
+        j += 1
+      }
+    }
+    kcenterFrame(s, selected)
+  }
+
+  private def kcenterDistributed(s: SparkSession, proj: DataFrame): DataFrame = {
+    val base = graft.util.CacheBin.persist(proj)
+    def d2(v: Column, c: Seq[Long]): Column =
+      aggregate(zip_with(v, typedlit(c), (a, b) => (a - b) * (a - b)),
+        lit(0L), (acc, x) => acc + x)
+    val first = base.orderBy("vec_id").limit(1).collect()
+    require(first.nonEmpty, "vec_kcenter: empty embeddings table")
+    var selected = Vector((first(0).getLong(0), 0L))
+    var centerVm = first(0).getSeq[Long](1)
+    var cur = base.withColumn("mind", d2(col("vm"), centerVm))
+    for (_ <- 1 until KC_K) {
+      val row = cur.orderBy(col("mind").desc, col("vec_id")).limit(1).collect()(0)
+      require(row.getLong(2) > 0L,
+        s"vec_kcenter: fewer than $KC_K distinct vectors — selection would repeat")
+      selected :+= ((row.getLong(0), row.getLong(2)))
+      centerVm = row.getSeq[Long](1)
+      cur = cur.withColumn("mind", least(col("mind"), d2(col("vm"), centerVm)))
+    }
+    kcenterFrame(s, selected)
+  }
+
+  /** The picks in selection order as (rank, vec_id, mind). */
+  private def kcenterFrame(s: SparkSession, selected: Seq[(Long, Long)]): DataFrame = {
+    import s.implicits._
+    selected.zipWithIndex
+      .map { case ((id, mind), r) => (r.toLong, id, mind) }
+      .toDF("rank", "vec_id", "mind")
+      .orderBy("rank")
   }
 
   val kcenterSampleSql: String = {

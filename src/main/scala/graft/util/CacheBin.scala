@@ -119,6 +119,16 @@ object CacheBin {
           .add(f)
     }
 
+  /** Drop the cached RDD behind an eager checkpoint. Plain
+    * `Dataset.unpersist` only consults the SQL cache manager, which knows
+    * nothing about checkpoint RDDs, so this reaches through the LogicalRDD;
+    * without it stale checkpoint blocks sit in executor storage until the
+    * ContextCleaner happens to collect them. */
+  def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.foreach(_.unpersist(blocking = false))
+
   private val globalReleasers =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, java.util.List[() => Unit]]()
 

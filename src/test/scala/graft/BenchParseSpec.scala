@@ -84,4 +84,17 @@ class BenchParseSpec extends AnyFunSuite {
     val line = """{"metric":"total","value":0.0,"unit":"sec","runs":3,"agg":"min","queries":{"q_b":1.750},"sf":"/x"}"""
     assert(Bench.parseChunkLine(line, g).isEmpty)
   }
+
+  test("a rejected chunk's stderr line is plain ASCII") {
+    // the forked test JVM (and many CI shells) run without a UTF-8 locale,
+    // where any non-ASCII character prints as '?'
+    val buf = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try assert(Bench.parseChunkLine("""{"metric":"total","value":1.250,"unit":"sec","queries":{"q_a":1.250},"sf":"/x"}""", g).isEmpty)
+    finally System.setErr(saved)
+    val text = buf.toString("UTF-8")
+    assert(text.contains("treating chunk as failed"))
+    assert(text.forall(_ < 128), text)
+  }
 }

@@ -133,6 +133,20 @@ object SparkSpec {
     }
   }
 
+  /** The rows of `df`, asserted equal (as a multiset) to the rows of `df`
+    * built inside [[graft.ops.LocalOrDistributed.forceDistributed]], where
+    * every size gate takes its distributed path. Each side is built and
+    * collected in its own [[graft.util.CacheBin]] scope. Returns the rows
+    * of the normal build. */
+  def pathsAgree(df: => org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] = {
+    def rows = graft.util.CacheBin.withScope(df.collect().toSeq)
+    val normal = rows
+    val distributed = graft.ops.LocalOrDistributed.forceDistributed(rows)
+    org.scalatest.Assertions.assertResult(normal.map(_.toString).sorted,
+      "rows of the forced-distributed build")(distributed.map(_.toString).sorted)
+    normal
+  }
+
   /** The usual 3-file ordered ingest in one call. */
   def writeOrderedStreamParts(df: org.apache.spark.sql.DataFrame,
       streamIn: java.io.File, n: Int = 3): Unit =

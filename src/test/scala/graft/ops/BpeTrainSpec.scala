@@ -10,13 +10,11 @@ class BpeTrainSpec extends SparkSpec {
   private def learn(k: Int, docs: String*): Seq[(Long, String, String, Long)] = {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    graft.util.CacheBin.withScope {
+    graft.SparkSpec.pathsAgree(
       BpeTrain.merges(docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-          .toDF("doc_id", "text"), "text", k)
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toSeq.sortBy(_._1)
-    }
+          .toDF("doc_id", "text"), "text", k))
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+      .sortBy(_._1)
   }
 
   behavior of "BpeTrain.merges"
@@ -75,21 +73,17 @@ class BpeTrainSpec extends SparkSpec {
       .map { case (g, i) => (i.toLong, g.mkString(" ")) }.toSeq
       .toDF("doc_id", "text")
     val k = 100
-    def run(f: (org.apache.spark.sql.DataFrame, String, Int) => org.apache.spark.sql.DataFrame) =
-      graft.util.CacheBin.withScope {
-        f(docs, "text", k).collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-          .toSeq.sortBy(_._1)
-      }
+    def ranks(rows: Seq[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .sortBy(_._1)
     // all three paths must agree rank-for-rank: the gated driver-local
-    // loop (default — this corpus is far under the vocab gate), the
-    // delta-counted distributed loop (forced with localVocabMax = 0), and
-    // the naive full-recount twin
-    val local = run(BpeTrain.merges(_, _, _))
-    val incremental = run(BpeTrain.merges(_, _, _, localVocabMax = 0L))
-    val naive = run(BpeTrain.mergesNaive)
+    // loop (this corpus is far under the vocab gate), the delta-counted
+    // distributed loop (pathsAgree forces it), and the naive full-recount
+    // twin
+    val local = ranks(graft.SparkSpec.pathsAgree(BpeTrain.merges(docs, "text", k)))
+    val naive = ranks(graft.util.CacheBin.withScope(
+      BpeTrain.mergesNaive(docs, "text", k).collect().toSeq))
     local should have size k.toLong
-    incremental shouldBe naive
     local shouldBe naive
   }
 }

@@ -51,15 +51,14 @@ class DupGroupsSpec extends SparkSpec {
     import spark.implicits._
     // diameter-5 chain with a cap of 1: propagation gives up, Auto retries
     // with large-star/small-star and still returns the exact fixpoint.
-    // localEdgeMax = 0 forces the distributed rounds (the default gate
-    // would take the driver-local path on a graph this small)
+    // Forced distributed: the gate would take the driver-local path on a
+    // graph this small
     val chain = (1L until 6L).map(i => (i, i + 1)).toDF("a", "b")
-    graft.util.CacheBin.withScope {
-      val labels = DupGroups.connectedComponentsAuto(chain, "a", "b",
-          maxIter = 1, localEdgeMax = 0L)
+    LocalOrDistributed.forceDistributed(graft.util.CacheBin.withScope {
+      val labels = DupGroups.connectedComponentsAuto(chain, "a", "b", maxIter = 1)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       labels shouldBe (1L to 6L).map(_ -> 1L).toMap
-    }
+    })
   }
 
   it should "return the identical fixpoint from the local and distributed paths" in {
@@ -67,13 +66,8 @@ class DupGroupsSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val edges = Seq.fill(120)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
       .toDF("a", "b") // self-loops included on purpose: both paths drop them
-    def run(gate: Long): Map[Long, Long] = graft.util.CacheBin.withScope {
-      DupGroups.connectedComponentsAuto(edges, "a", "b", localEdgeMax = gate)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    val local = run(1L << 20) // under the gate → driver union-find
-    val dist = run(0L)        // forced distributed rounds
-    local shouldBe dist
+    graft.SparkSpec.pathsAgree(DupGroups.connectedComponentsAuto(edges, "a", "b")) should
+      not be empty
   }
 
   it should "produce identical output under reliable checkpointing" in {

@@ -1,22 +1,19 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Label propagation: the local (collected) and distributed paths are the
   * same function; the majority/tie rule is pinned on hand graphs. */
 class LabelPropSpec extends SparkSpec {
 
-  private def runBoth(nodes: Seq[Long], edges: Seq[(Long, Long, Long)],
-      iters: Int): (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+  /** Labels from the local path, asserted equal to the distributed path's. */
+  private def labels(nodes: Seq[Long], edges: Seq[(Long, Long, Long)],
+      iters: Int): Seq[(Long, Long)] = {
     import spark.implicits._
     val nd = nodes.toDF("node")
     val ed = edges.toDF("u", "v", "w")
-    def res(localMax: Long) = graft.util.CacheBin.withScope {
-      LabelProp.run(nd, ed, iters, localMax)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    }
-    (res(1L << 20), res(0L))
+    graft.SparkSpec.pathsAgree(LabelProp.run(nd, ed, iters))
+      .map(r => (r.getLong(0), r.getLong(1))).sorted
   }
 
   behavior of "LabelProp"
@@ -26,10 +23,8 @@ class LabelPropSpec extends SparkSpec {
     // node 4 hears only label 1 (w=1); nodes 2,3 hear node 1's label
     val edges = Seq((1L, 2L, 3L), (1L, 3L, 3L), (4L, 1L, 1L),
       (2L, 1L, 1L), (3L, 1L, 1L))
-    val (local, dist) = runBoth(Seq(1L, 2L, 3L, 4L, 9L), edges, 1)
-    local shouldBe dist
-    local shouldBe Seq((1L, 2L), (2L, 1L), (3L, 1L), (4L, 1L),
-      (9L, 9L)) // 9 is isolated: keeps itself
+    labels(Seq(1L, 2L, 3L, 4L, 9L), edges, 1) shouldBe
+      Seq((1L, 2L), (2L, 1L), (3L, 1L), (4L, 1L), (9L, 9L)) // 9 is isolated: keeps itself
   }
 
   it should "agree between paths over multiple rounds on a random graph" in {
@@ -39,17 +34,13 @@ class LabelPropSpec extends SparkSpec {
       (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong, 1L + rnd.nextInt(5))
     }.filter(e => e._1 != e._2)
       .map { case (u, v, w) => (u, v, w.toLong) }
-    for (iters <- Seq(1, 3, 4)) {
-      val (local, dist) = runBoth(nodes, edges, iters)
-      withClue(s"iters=$iters: ") { local shouldBe dist }
-    }
+    for (iters <- Seq(1, 3, 4))
+      withClue(s"iters=$iters: ") { labels(nodes, edges, iters) should have size 60 }
   }
 
   it should "drop non-positive edge weights on both paths" in {
     val edges = Seq((1L, 2L, 0L), (1L, 3L, -5L), (2L, 1L, 2L))
-    val (local, dist) = runBoth(Seq(1L, 2L, 3L), edges, 2)
-    local shouldBe dist
     // node 1 has no positive in-edges: keeps its own label
-    local.find(_._1 == 1L).get._2 shouldBe 1L
+    labels(Seq(1L, 2L, 3L), edges, 2).find(_._1 == 1L).get._2 shouldBe 1L
   }
 }

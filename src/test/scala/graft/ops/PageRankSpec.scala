@@ -56,25 +56,8 @@ class PageRankSpec extends SparkSpec {
     import spark.implicits._
     val edges = Seq(("a", "b", 3L), ("a", "c", 1L), ("b", "c", 2L),
       ("c", "a", 1L), ("d", "c", 5L), ("c", "d", 1L))
-    val local = PageRank.run(edges.toDF("src", "dst", "w"), 10)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val dist = PageRank.run(edges.toDF("src", "dst", "w"), 10,
-        localEdgeMax = 0L) // force the distributed rounds
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    dist shouldBe local
-  }
-
-  it should "take the local path for a gate at or above Int.MaxValue" in {
-    import spark.implicits._
-    val edges = Seq(("a", "b", 3L), ("a", "c", 1L), ("b", "c", 2L),
-      ("c", "a", 1L)).toDF("src", "dst", "w")
-    def jobs(gate: Long): Int = graft.SparkSpec.jobsDuring(spark) {
-      PageRank.run(edges, 4, localEdgeMax = gate).collect()
-    }._2
-    val local = jobs(1L << 20)
-    jobs(Int.MaxValue.toLong) shouldBe local
-    jobs(Long.MaxValue) shouldBe local
-    jobs(0L) should be > local // forced distributed rounds
+    graft.SparkSpec.pathsAgree(PageRank.run(edges.toDF("src", "dst", "w"), 10))
+      .map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe reference(edges, 10)
   }
 
   it should "drop zero-weight edges identically on both paths" in {
@@ -83,22 +66,16 @@ class PageRankSpec extends SparkSpec {
     // (no division by its zero wsum) and rank like any other sink
     val edges = Seq(("a", "b", 2L), ("b", "a", 1L), ("z", "a", 0L),
       ("a", "z", 1L))
-    val local = PageRank.run(edges.toDF("src", "dst", "w"), 5)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val dist = PageRank.run(edges.toDF("src", "dst", "w"), 5, localEdgeMax = 0L)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    dist shouldBe local
+    val local = graft.SparkSpec.pathsAgree(PageRank.run(edges.toDF("src", "dst", "w"), 5))
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     local.keySet shouldBe Set("a", "b", "z")
   }
 
   it should "accept integer node ids on both paths with matching ranks" in {
     import spark.implicits._
     val edges = Seq((1L, 2L, 3L), (1L, 3L, 1L), (2L, 3L, 2L), (3L, 1L, 1L))
-    val local = PageRank.run(edges.toDF("src", "dst", "w"), 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = PageRank.run(edges.toDF("src", "dst", "w"), 8, localEdgeMax = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    dist shouldBe local
+    val local = graft.SparkSpec.pathsAgree(PageRank.run(edges.toDF("src", "dst", "w"), 8))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     local.keySet shouldBe Set(1L, 2L, 3L)
   }
 
@@ -110,11 +87,8 @@ class PageRankSpec extends SparkSpec {
     // Here w = W (single out-edge) so the exact forward is just t.
     val bigW = 2000000000L
     val edges = Seq(("a", "b", bigW), ("b", "a", bigW), ("c", "a", bigW))
-    val local = PageRank.run(edges.toDF("src", "dst", "w"), 10)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val dist = PageRank.run(edges.toDF("src", "dst", "w"), 10, localEdgeMax = 0L)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    dist shouldBe local
+    val local = graft.SparkSpec.pathsAgree(PageRank.run(edges.toDF("src", "dst", "w"), 10))
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     all(local.values) should be >= 0L  // no wrapped negatives
     local.values.sum should be <= 3000000000L // mass conserved up to leakage
   }

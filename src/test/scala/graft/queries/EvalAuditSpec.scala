@@ -154,8 +154,8 @@ class EvalAuditSpec extends SparkSpec {
   it should "fall back to a shuffled join above the broadcast gate, bit-identically" in {
     // the size gate (round 20, VERDICT r19 #1): at crawl-typical dup rates
     // the component table is corpus-order and a forced broadcast dies at
-    // the 8 GB cap — a zero-row gate forces the sort-merge path here, which
-    // must produce the exact same rollup AND a plan with no broadcast of
+    // the 8 GB cap — the forced-distributed path takes the sort-merge
+    // join, which must produce the exact same rollup AND a plan with no broadcast of
     // the members frame (the one remaining broadcast is allowed to be the
     // ≤125-row grid/totals side, so assert on the join ABOVE the corpus)
     // auto-broadcast off for the plan assert: the gate only withholds the
@@ -164,18 +164,14 @@ class EvalAuditSpec extends SparkSpec {
     // point; at corpus-order stats it plans the shuffle this test pins
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.get(key)
-    val (plan, gotGated) = try {
+    val plan = try {
       spark.conf.set(key, "-1")
-      val gated = PipelineQueries.splitClustersGated(spark, dir, 0L)
-      (gated.queryExecution.executedPlan.toString,
-        rows(gated).map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4))).toVector)
+      graft.SparkSpec.pathsAgree(PipelineQueries.splitClusters(spark, dir)) should not be empty
+      graft.ops.LocalOrDistributed.forceDistributed(graft.util.CacheBin.withScope {
+        PipelineQueries.splitClusters(spark, dir).queryExecution.executedPlan.toString
+      })
     } finally spark.conf.set(key, saved)
     plan should include("SortMergeJoin")
-    gotGated shouldBe
-      rows(PipelineQueries.splitClusters(spark, dir))
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4))).toVector
   }
 
   it should "yield ZERO cross-split near-dup pairs (the audit's fix, re-proven)" in {

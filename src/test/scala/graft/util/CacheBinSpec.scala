@@ -112,4 +112,24 @@ class CacheBinSpec extends SparkSpec {
     e.getMessage shouldBe "fake"
     ranAfterFatal.get() shouldBe false // sweep stopped at the fatal error
   }
+
+  it should "hold no persisted RDD after the checkpointing operators' distributed runs" in {
+    import spark.implicits._
+    import graft.ops.{BpeTrain, DupGroups, LocalOrDistributed, PageRank}
+    graft.functions.GraftFunctions.register(spark)
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
+    val weighted = Seq(("a", "b", 3L), ("b", "c", 1L), ("c", "a", 2L))
+      .toDF("src", "dst", "w")
+    val docs = Seq((0L, "abab abba"), (1L, "baab ab")).toDF("doc_id", "text")
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "DupGroups" -> (() => DupGroups.connectedComponentsAuto(pairs, "a", "b")),
+      "PageRank" -> (() => PageRank.run(weighted, 5)),
+      "BpeTrain" -> (() => BpeTrain.merges(docs, "text", 2))).foreach {
+      case (name, op) =>
+        val before = persisted
+        LocalOrDistributed.forceDistributed(CacheBin.withScope(op().collect()))
+        withClue(s"$name: ") { persisted shouldBe before }
+    }
+  }
 }

@@ -1,12 +1,13 @@
-package graft.queries
+package graft.tools
 
+import graft.ops.LocalOrDistributed
+import graft.queries.VectorQueries
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Dev tool (lives in graft.queries for access to the private[queries]
-  * kcenterSample overload): dump the vec_kcenter local-gate and
-  * forced-distributed plans — the plan-pair evidence VERDICT r21 #8 asked
-  * for. Usage: KcenterPlanDump [sfDir] [outDir]. */
+/** Dev tool: dump the vec_kcenter plans of the gated driver-local path and
+  * of the forced-distributed k-round loop.
+  * Usage: KcenterPlanDump [sfDir] [outDir]. */
 object KcenterPlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -22,16 +23,16 @@ object KcenterPlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(out))
-    def dump(name: String, localMax: Int): Unit =
+    def dump(name: String): Unit =
       graft.util.CacheBin.withScope {
-        val df = VectorQueries.kcenterSample(spark, dir, localMax)
+        val df = VectorQueries.kcenterSample(spark, dir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$out/vec_kcenter_$name.txt"), plan)
         System.err.println(s"[plan] vec_kcenter_$name ok (${plan.length} chars)")
       }
-    dump("local", 1 << 16) // gate passes at bench tiers: driver greedy loop
-    dump("distributed", 0) // forced distributed k-round loop
+    dump("local") // the gate passes at bench tiers: driver greedy loop
+    LocalOrDistributed.forceDistributed(dump("distributed"))
     spark.stop()
   }
 }

@@ -1,24 +1,23 @@
 package graft.tools
 
+import graft.ops.LocalOrDistributed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for the DISTRIBUTED LabelProp path above its 2^20-edge
-  * auto-gate (round 20, VERDICT r19 #3 — every recorded tier so far took
-  * the driver-local path, while the distributed rounds are the 100 TB
-  * claim).
+  * gate (every recorded tier before it took the driver-local path, while
+  * the distributed rounds are the 100 TB claim). The local/distributed
+  * crossover it once swept is recorded in SCALE.md §4.
   *
   * Builds a deterministic synthetic power-law graph (xxhash64 endpoints,
   * cubed-uniform destination for hub skew — the degree shape of a kNN/web
   * graph), then:
-  *   1. times the forced-distributed path (`localEdgeMax = 0`) and the
-  *      auto-gated call (edge count above the gate ⇒ same path) at the
-  *      requested size;
-  *   2. asserts forced-local == forced-distributed on a seeded overlapping
-  *      subgraph (nodes < subN) — the LabelPropSpec rule-equality witness,
-  *      re-proven at tool scale;
-  *   3. sweeps a tier ladder with BOTH paths forced to locate the actual
-  *      local/distributed crossover vs the 2^20 default.
+  *   1. times the forced-distributed path
+  *      ([[graft.ops.LocalOrDistributed.forceDistributed]]) and the gated
+  *      call (edge count above the gate ⇒ same path) at the requested size;
+  *   2. asserts gated-local == forced-distributed on a seeded overlapping
+  *      subgraph (nodes < subN, under the gate) — the LabelPropSpec
+  *      rule-equality witness, re-proven at tool scale.
   *
   * Usage: LpaScale [nEdges] [nNodes] [iters]
   */
@@ -60,47 +59,31 @@ object LpaScale {
     val eCount = edges.count()
     println(s"[lpa] graph: $eCount edges, $nNodes nodes, iters=$iters " +
       s"(gate=2^20=${1L << 20})")
-    val distRows = time(s"forced-distributed (localEdgeMax=0), $eCount edges") {
-      graft.util.CacheBin.withScope {
-        graft.ops.LabelProp.run(nodes, edges, iters, localEdgeMax = 0L).count()
-      }
+    val distRows = time(s"forced-distributed, $eCount edges") {
+      LocalOrDistributed.forceDistributed(graft.util.CacheBin.withScope {
+        graft.ops.LabelProp.run(nodes, edges, iters).count()
+      })
     }
     require(distRows == nNodes, s"expected $nNodes labeled nodes, got $distRows")
-    val autoRows = time(s"auto-gated (default), $eCount edges > gate") {
+    val autoRows = time(s"gated (default), $eCount edges > gate") {
       graft.util.CacheBin.withScope {
         graft.ops.LabelProp.run(nodes, edges, iters).count()
       }
     }
-    require(autoRows == nNodes, s"auto-gated path returned $autoRows rows")
+    require(autoRows == nNodes, s"gated path returned $autoRows rows")
 
-    // 2. subgraph equality witness: forced-local vs forced-distributed
+    // 2. subgraph equality witness: gated-local vs forced-distributed
     val subN = 20000L
     val (subNodes, _) = graph(0L, subN)
     val subEdges = edges.filter(col("u") < subN && col("v") < subN)
-    def labelsOf(gate: Long): Array[(Long, Long)] =
+    def labels: Array[(Long, Long)] =
       graft.util.CacheBin.withScope {
-        graft.ops.LabelProp.run(subNodes, subEdges, iters, gate)
+        graft.ops.LabelProp.run(subNodes, subEdges, iters)
           .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
       }
-    val eq = labelsOf(Long.MaxValue).sameElements(labelsOf(0L))
+    val eq = labels.sameElements(LocalOrDistributed.forceDistributed(labels))
     println(s"[lpa] subgraph(local == distributed, n=$subN): $eq")
     require(eq, "local and distributed paths diverged on the subgraph")
-
-    // 3. crossover ladder, both paths forced per tier
-    Seq(100000L, 300000L, 1000000L, 2000000L).filter(_ <= nEdges).foreach { m =>
-      val (nd, ed) = graph(m, m / 10)
-      val local = time(f"tier $m%8d edges  forced-LOCAL") {
-        graft.util.CacheBin.withScope {
-          graft.ops.LabelProp.run(nd, ed, iters, Long.MaxValue).count()
-        }
-      }
-      val dist = time(f"tier $m%8d edges  forced-DISTRIBUTED") {
-        graft.util.CacheBin.withScope {
-          graft.ops.LabelProp.run(nd, ed, iters, 0L).count()
-        }
-      }
-      require(local == dist, s"row counts diverged at tier $m")
-    }
     println("[lpa] DONE")
     spark.stop()
   }
