@@ -1,10 +1,10 @@
 package graft.ops
 
 import graft.model.GraftEvent
+import graft.streaming.KeyedFold
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Control-gating (reference filterByControlSource, StreamJob.scala:179-227):
   * a data stream keyed like a control stream passes data events only while
@@ -12,9 +12,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   *
   * Batch: a running last-ignore-nulls window over the time-ordered union —
   * one shuffle on key, no state.
-  * Streaming: union of tagged events → groupByKey → `transformWithState`
-  * holding the latest control activation per key in the RocksDB-capable
-  * state store (the reference's keyed filterWithState shape).
+  * Streaming: the union of tagged events folded per key by
+  * [[graft.streaming.KeyedFold]], holding the latest control activation
+  * per key in the state store (the reference's keyed filterWithState
+  * shape).
   */
 object ControlGate {
 
@@ -55,29 +56,6 @@ object ControlGate {
       .as[D]
   }
 
-  private final class GateProcessor[D]
-      extends StatefulProcessor[String, (String, Long, Boolean, Boolean, D), D] {
-
-    @transient private var active: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      active = getHandle.getValueState[Boolean]("active",
-        Encoders.scalaBoolean, TTLConfig.NONE)
-
-    override def handleInputRows(key: String,
-        rows: Iterator[(String, Long, Boolean, Boolean, D)],
-        timerValues: TimerValues): Iterator[D] = {
-      // within a micro-batch, apply in event-time order (control first on ties)
-      var on = active.exists() && active.get()
-      val out = rows.toSeq.sortBy(r => (r._2, !r._3)).flatMap {
-        case (_, _, true, a, _) => on = a; None
-        case (_, _, false, _, d) => if (on) Some(d) else None
-      }
-      active.update(on)
-      out.iterator
-    }
-  }
-
   private def gateStreaming[D <: GraftEvent: Encoder, C <: GraftEvent: Encoder](
       controls: Dataset[C], data: Dataset[D]): Dataset[D] = {
     val spark = data.sparkSession
@@ -90,9 +68,15 @@ object ControlGate {
     val cTagged = controls.map { e =>
       (e.$key, e.$timestamp, true, e.$active, null.asInstanceOf[D])
     }
-    cTagged.union(dTagged)
-      .groupByKey(_._1)(Encoders.STRING)
-      .transformWithState(new GateProcessor[D],
-        TimeMode.None(), OutputMode.Append(), implicitly[Encoder[D]])
+    KeyedFold(cTagged.union(dTagged), "active")(_._1) {
+      (_, prev: Option[Boolean], rows) =>
+        // within a micro-batch, apply in event-time order (control first on ties)
+        var on = prev.contains(true)
+        val out = rows.toSeq.sortBy(r => (r._2, !r._3)).flatMap {
+          case (_, _, true, a, _) => on = a; None
+          case (_, _, false, _, d) => if (on) Some(d) else None
+        }
+        (on, out.iterator)
+    }
   }
 }

@@ -2,8 +2,8 @@ package graft.ops
 
 import graft.algorithm.StableBloomFilter
 import graft.model.GraftEvent
+import graft.streaming.KeyedFold
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Deduplication operators (reference SBFDeduplicationFilter.scala:45-109):
   *
@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   *  - `sbf`: Stable-Bloom-Filter dedup — the bounded-memory answer for
   *    100 TB streams where exact state would grow without bound. Keyed by
   *    `$key` so filter state shards across executors; each key holds its
-  *    own SBF in transformWithState state (streaming) or a per-partition
+  *    own SBF in [[graft.streaming.KeyedFold]] state (streaming) or a per-partition
   *    filter (batch, where partition-local dedup after a key repartition is
   *    exact per key).
   */
@@ -52,36 +52,9 @@ object Dedup {
       }
   }
 
-  /** Per-key SBF [[org.apache.spark.sql.streaming.StatefulProcessor]]:
-    * the serialized filter lives as bytes in the state store (the
-    * reference keeps SBF in keyed Flink state the same way,
-    * SBFDeduplicationFilter.scala:66-84). */
-  private final class SbfProcessor[E <: GraftEvent](
-      numCells: Int, bitsPerCell: Int, numHashes: Int, decayCells: Int)
-      extends StatefulProcessor[String, (String, E), E] {
-
-    @transient private var bytes: ValueState[Array[Byte]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      bytes = getHandle.getValueState[Array[Byte]]("sbf",
-        Encoders.BINARY, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[(String, E)],
-        timerValues: TimerValues): Iterator[E] = {
-      val sbf =
-        if (bytes.exists())
-          StableBloomFilter.fromBytes(bytes.get(), numCells, bitsPerCell, numHashes, decayCells)
-        else StableBloomFilter(numCells, bitsPerCell, numHashes, decayCells)
-      val out = rows.flatMap { case (_, e) =>
-        if (sbf.add(e.$dedupeId)) None else Some(e)
-      }.toVector
-      bytes.update(sbf.toBytes)
-      out.iterator
-    }
-  }
-
-  /** Streaming SBF dedup keyed by `$key` on `transformWithState` — per-key
-    * filter state in the RocksDB-capable state store. */
+  /** Streaming SBF dedup keyed by `$key`: each key's filter lives as bytes
+    * in the state store (the reference keeps SBF in keyed Flink state the
+    * same way, SBFDeduplicationFilter.scala:66-84). */
   def sbfStreaming[E <: GraftEvent: Encoder](
       ds: Dataset[E],
       numCells: Int = 1 << 16,
@@ -92,9 +65,14 @@ object Dedup {
     import spark.implicits._
     implicit val tupleEnc: Encoder[(String, E)] =
       Encoders.tuple(Encoders.STRING, implicitly[Encoder[E]])
-    ds.map(e => (e.$key, e))
-      .groupByKey(_._1)(Encoders.STRING)
-      .transformWithState(new SbfProcessor[E](numCells, bitsPerCell, numHashes, decayCells),
-        TimeMode.None(), OutputMode.Append(), implicitly[Encoder[E]])
+    KeyedFold(ds.map(e => (e.$key, e)), "sbf")(_._1) {
+      (_, prev: Option[Array[Byte]], rows) =>
+        val sbf = prev.fold(StableBloomFilter(numCells, bitsPerCell, numHashes, decayCells))(
+          StableBloomFilter.fromBytes(_, numCells, bitsPerCell, numHashes, decayCells))
+        val out = rows.flatMap { case (_, e) =>
+          if (sbf.add(e.$dedupeId)) None else Some(e)
+        }.toVector
+        (sbf.toBytes, out.iterator)
+    }
   }
 }

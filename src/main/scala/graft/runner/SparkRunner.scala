@@ -55,8 +55,8 @@ abstract class SparkRunner[ADT <: GraftEvent](
       .config("spark.sql.shuffle.partitions", config.getInt("shuffle.partitions", 32))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", config.getString("ui.enabled", "false"))
-      // RocksDB state store: required by transformWithState (EmaState,
-      // ControlGate, TtlDedup, CountWindows, SBF dedup) and the right
+      // RocksDB state store: required by transformWithState (KeyedFold,
+      // TtlDedup, AllowedLateness, StreamResample) and the right
       // default at scale anyway — state spills to local disk instead of
       // living on the executor heap. Override with state.store.provider.
       .config("spark.sql.streaming.stateStore.providerClass",

@@ -66,7 +66,7 @@ object CleanCorpusStream {
     val inBatchCanon = quality
       .withColumn("__mn", min("doc_id").over(wFp))
       .filter(col("doc_id") === col("__mn")).drop("__mn")
-    val seenFp = readState(spark, s"$statePath/fp", batchId)
+    val seenFp = BatchState.read(spark, s"$statePath/fp", batchId)
     val exactSurvivors0 = seenFp match {
       case Some(s) => inBatchCanon.join(s.select("fp"), Seq("fp"), "left_anti")
       case None => inBatchCanon
@@ -92,12 +92,12 @@ object CleanCorpusStream {
 
     // cross-batch: this batch's band keys against retained state bands —
     // every state hit is verified against the OLD doc's exact shingle set
-    val crossDrops = readState(spark, s"$statePath/bands", batchId) match {
+    val crossDrops = BatchState.read(spark, s"$statePath/bands", batchId) match {
       case Some(sb) =>
         val cand = bands.join(sb.select(col("band"), col("k"),
               col("doc_id").as("doc_a")), Seq("band", "k"))
           .select(col("doc_a"), col("doc_id").as("doc_b")).distinct()
-        val oldHs = readState(spark, s"$statePath/hs", batchId).get
+        val oldHs = BatchState.read(spark, s"$statePath/hs", batchId).get
         verifiedDrops(cand, oldHs, hs, jaccNum, jaccDen)
       case None => hs.select("doc_id").limit(0).withColumnRenamed("doc_id", "drop_id")
     }
@@ -111,9 +111,9 @@ object CleanCorpusStream {
 
     // ---- register (idempotent: overwrite OUR partition only) ----
     exactSurvivors.select("fp").distinct()
-      .write.mode("overwrite").parquet(s"$statePath/fp/batch=$batchId")
-    bands.write.mode("overwrite").parquet(s"$statePath/bands/batch=$batchId")
-    hs.write.mode("overwrite").parquet(s"$statePath/hs/batch=$batchId")
+      .write.mode("overwrite").parquet(BatchState.dir(s"$statePath/fp", batchId))
+    bands.write.mode("overwrite").parquet(BatchState.dir(s"$statePath/bands", batchId))
+    hs.write.mode("overwrite").parquet(BatchState.dir(s"$statePath/hs", batchId))
     bands.unpersist(); hs.unpersist(); exactSurvivors.unpersist()
     kept
   }
@@ -132,20 +132,6 @@ object CleanCorpusStream {
         call_function("graft_intersect_size", col("hs_a"), col("hs_b")))
       .filter(col("inter") * jaccDen >= (col("n_a") + col("n_b") - col("inter")) * jaccNum)
       .select(col("doc_b").as("drop_id")).distinct()
-
-  /** Retained state partitions strictly BEFORE this batch (replay safety:
-    * a re-run batch must not dedup against its own half-written state). */
-  private def readState(spark: org.apache.spark.sql.SparkSession,
-      path: String, batchId: Long): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val has = fs.exists(root) &&
-      fs.listStatus(root).exists(_.getPath.getName.startsWith("batch="))
-    if (has) {
-      val df = spark.read.parquet(path).filter(col("batch") < batchId)
-      Some(df)
-    } else None
-  }
 
   /** The pipeline as a ready writeStream: each micro-batch is cleaned and
     * the kept rows handed to `emit`. Callers set the checkpoint location

@@ -1,14 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Per-key COUNT windows — Flink's `keyBy(...).countWindow(n)` assigner,
   * the non-time window family the reference's windowedAggregation accepts
   * (SURVEY §2.4: "arbitrary WindowAssigners (e.g. global/count windows) →
-  * keyed stateful processing", here on Spark 4's `transformWithState`).
+  * keyed stateful processing", here on [[KeyedFold]]).
   *
   * Batch: a ranking window assigns each row its per-key sequence number;
   * `(seq - 1) div n` is the window ordinal — one shuffle + one sort, fully
@@ -39,18 +38,14 @@ object CountWindows {
     * accessor code for it — a private class fails Janino compilation). */
   final case class CwState(winSeq: Long, cnt: Long, sum: Double)
 
-  private final class CwProcessor(n: Int)
-      extends StatefulProcessor[String, KeyedValue, CountWindow] {
-
-    @transient private var st: ValueState[CwState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[CwState]("cw",
-        Encoders.product[CwState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[KeyedValue],
-        timerValues: TimerValues): Iterator[CountWindow] = {
-      var s = if (st.exists()) st.get() else CwState(0L, 0L, 0.0)
+  /** Streaming count windows on [[KeyedFold]]: emits one row per
+    * FILLED window of `n` events per key (Flink countWindow semantics — a
+    * partial window at stream end never fires). */
+  def streaming(ds: Dataset[KeyedValue], n: Int): Dataset[CountWindow] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold(ds, "cw")(_.key) { (key, prev: Option[CwState], rows) =>
+      var s = prev.getOrElse(CwState(0L, 0L, 0.0))
       val out = Seq.newBuilder[CountWindow]
       // deterministic order within the micro-batch
       rows.toSeq.sortBy(r => (r.ts, r.value)).foreach { r =>
@@ -60,18 +55,7 @@ object CountWindows {
           s = CwState(s.winSeq + 1, 0L, 0.0)
         }
       }
-      st.update(s)
-      out.result().iterator
+      (s, out.result().iterator)
     }
-  }
-
-  /** Streaming count windows on `transformWithState`: emits one row per
-    * FILLED window of `n` events per key (Flink countWindow semantics — a
-    * partial window at stream end never fires). */
-  def streaming(ds: Dataset[KeyedValue], n: Int): Dataset[CountWindow] = {
-    implicit val outEnc: Encoder[CountWindow] = Encoders.product[CountWindow]
-    ds.groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new CwProcessor(n),
-        TimeMode.None(), OutputMode.Append(), outEnc)
   }
 }

@@ -2,17 +2,15 @@ package graft.streaming
 
 import graft.agg.EmaFamily
 import graft.agg.EmaFamily.{EmaState => S}
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Keyed exponential-moving aggregates as a stateful streaming op — the
   * order-dependent EMA family (reference ExponentialMovingAverage/Variance/
   * StandardDeviation) cannot be a commutative Spark aggregate, so per-key
   * state + deterministic event-time ordering within each micro-batch is the
-  * correct Structured Streaming shape. Runs on Spark 4's
-  * `transformWithState` (state in the RocksDB-capable state store — the
-  * same engine-managed, checkpointed home as every other graft stateful
-  * op since the TtlDedup migration; flatMapGroupsWithState retired).
+  * correct Structured Streaming shape. Runs on [[KeyedFold]] (state in the
+  * RocksDB-capable state store — the same engine-managed, checkpointed
+  * home as every other graft stateful op).
   *
   * Emits one updated (key, count, ema, emv, emsd) row per input event batch.
   */
@@ -21,31 +19,16 @@ object EmaState {
   final case class KeyedValue(key: String, ts: Long, value: Double)
   final case class EmaOutput(key: String, count: Long, ema: Double, emv: Double, emsd: Double)
 
-  private final class Processor(alpha: Double)
-      extends StatefulProcessor[String, KeyedValue, EmaOutput] {
-
-    @transient private var st: ValueState[S] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[S]("ema", Encoders.product[S], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[KeyedValue],
-        timerValues: TimerValues): Iterator[EmaOutput] = {
-      // deterministic per-key event-time order inside the micro-batch
-      val sorted = rows.toSeq.sortBy(_.ts)
-      val start = if (st.exists()) st.get() else S.empty
-      val end = sorted.foldLeft(start)((s, r) => s.add(r.value, alpha))
-      st.update(end)
-      Iterator.single(EmaOutput(key, end.count, end.ema, end.emv, end.emsd))
-    }
-  }
-
   def apply(
       ds: Dataset[KeyedValue],
       alpha: Double = EmaFamily.DefaultAlpha): Dataset[EmaOutput] = {
-    implicit val outEnc: Encoder[EmaOutput] = Encoders.product[EmaOutput]
-    ds.groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new Processor(alpha),
-        TimeMode.None(), OutputMode.Append(), outEnc)
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold(ds, "ema")(_.key) { (key, prev: Option[S], rows) =>
+      // deterministic per-key event-time order inside the micro-batch
+      val end = rows.toSeq.sortBy(_.ts)
+        .foldLeft(prev.getOrElse(S.empty))((s, r) => s.add(r.value, alpha))
+      (end, Iterator.single(EmaOutput(key, end.count, end.ema, end.emv, end.emsd)))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Streaming 3-sigma anomaly stats — the incremental form of
   * [[graft.queries.EventAnalytics.anomalyZscore]] (stream-job framing per
@@ -32,31 +31,16 @@ object StreamAnomaly {
     * monotonic, so max-n per type is the latest (= final) snapshot. */
   final case class TypeStats(event_type: String, n: Long, s: Long, q: Long)
 
-  private final class Processor
-      extends StatefulProcessor[String, ValueEvent, TypeStats] {
-
-    @transient private var st: ValueState[TypeStats] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[TypeStats]("stats",
-        Encoders.product[TypeStats], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[ValueEvent],
-        timerValues: TimerValues): Iterator[TypeStats] = {
-      var s = if (st.exists()) st.get() else TypeStats(key, 0L, 0L, 0L)
-      rows.foreach { r =>
-        s = TypeStats(key, s.n + 1L, s.s + r.x, s.q + r.x * r.x)
-      }
-      st.update(s)
-      Iterator.single(s)
-    }
-  }
-
   def apply(ds: Dataset[ValueEvent]): Dataset[TypeStats] = {
-    implicit val outEnc: Encoder[TypeStats] = Encoders.product[TypeStats]
-    ds.groupByKey(_.event_type)(Encoders.STRING)
-      .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
-        outEnc)
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold(ds, "stats")(_.event_type) { (t, prev: Option[TypeStats], rows) =>
+      var s = prev.getOrElse(TypeStats(t, 0L, 0L, 0L))
+      rows.foreach { r =>
+        s = TypeStats(t, s.n + 1L, s.s + r.x, s.q + r.x * r.x)
+      }
+      (s, Iterator.single(s))
+    }
   }
 
   /** The shared integer outlier predicate: given events (event_id,

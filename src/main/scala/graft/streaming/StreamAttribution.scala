@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Streaming multi-touch attribution — the online form of
   * [[graft.queries.EventAnalytics.attribution]] (stream-job framing per
@@ -34,18 +33,12 @@ object StreamAttribution {
   final case class AttrCredit(user_id: Long, conv_id: Long, touch_id: Long,
       touch_type: String, c_first: Long, c_last: Long, c_linear: Long)
 
-  private final class Processor(lookbackUs: Long)
-      extends StatefulProcessor[Long, AttrEvent, AttrCredit] {
-
-    @transient private var st: ValueState[AttrBuf] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[AttrBuf]("touches",
-        Encoders.product[AttrBuf], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[AttrEvent],
-        timerValues: TimerValues): Iterator[AttrCredit] = {
-      var buf = if (st.exists()) st.get() else AttrBuf(Long.MinValue, Nil)
+  def apply(ds: Dataset[AttrEvent],
+      lookbackUs: Long = 7L * 24 * 3600 * 1000000): Dataset[AttrCredit] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold(ds, "touches")(_.user_id) { (user, prev: Option[AttrBuf], rows) =>
+      var buf = prev.getOrElse(AttrBuf(Long.MinValue, Nil))
       val out = Seq.newBuilder[AttrCredit]
       rows.toSeq.sortBy(r => (r.ts_us, r.event_id)).foreach { r =>
         if (r.event_type == "view" || r.event_type == "click") {
@@ -61,7 +54,7 @@ object StreamAttribution {
             val rem = 1000000L % n
             eligible.zipWithIndex.foreach { case (t, i) =>
               val rk = i + 1
-              out += AttrCredit(key, r.event_id, t.event_id, t.event_type,
+              out += AttrCredit(user, r.event_id, t.event_id, t.event_type,
                 if (rk == 1) 1000000L else 0L,
                 if (rk == n) 1000000L else 0L,
                 per + (if (rk <= rem) 1L else 0L))
@@ -76,16 +69,7 @@ object StreamAttribution {
       // never again satisfy `touch_ts >= conv_ts − lookback` for any later
       // conversion under ordered delivery
       val pruned = buf.touches.filter(_.ts_us >= buf.maxTs - lookbackUs)
-      st.update(AttrBuf(buf.maxTs, pruned))
-      out.result().iterator
+      (AttrBuf(buf.maxTs, pruned), out.result().iterator)
     }
-  }
-
-  def apply(ds: Dataset[AttrEvent],
-      lookbackUs: Long = 7L * 24 * 3600 * 1000000): Dataset[AttrCredit] = {
-    implicit val outEnc: Encoder[AttrCredit] = Encoders.product[AttrCredit]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new Processor(lookbackUs), TimeMode.None(),
-        OutputMode.Append(), outEnc)
   }
 }

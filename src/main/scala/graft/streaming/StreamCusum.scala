@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Streaming one-sided CUSUM alarms — the online form of
   * [[graft.queries.EventQueries.cusum]] (stream-job framing per the
@@ -12,7 +11,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * State per user is EXACTLY the recurrence's sufficient statistic: the
   * current cusum value `s` plus a fired flag — 9 bytes logical. Each
   * micro-batch folds its rows in (ts_us, event_id) order (the batch sort
-  * order; rows inside a handleInputRows call arrive unsorted, so the
+  * order; a key's rows inside a micro-batch arrive unsorted, so the
   * group's batch slice is buffered and sorted — bounded by the per-user
   * per-batch row count), emitting the FIRST crossing of `s >= h` once.
   * Because the recurrence is evaluated in the identical order with
@@ -34,35 +33,20 @@ object StreamCusum {
       alarm_ts_us: Long, s_cents: Long)
   final case class CusumState(s: Long, fired: Boolean)
 
-  private final class Processor(k: Long, h: Long)
-      extends StatefulProcessor[Long, CusumEvent, CusumAlarm] {
-
-    @transient private var st: ValueState[CusumState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[CusumState]("cusum",
-        Encoders.product[CusumState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[CusumEvent],
-        timerValues: TimerValues): Iterator[CusumAlarm] = {
-      var state = if (st.exists()) st.get() else CusumState(0L, fired = false)
+  def apply(ds: Dataset[CusumEvent], k: Long, h: Long): Dataset[CusumAlarm] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold(ds, "cusum")(_.user_id) { (user, prev: Option[CusumState], rows) =>
+      var state = prev.getOrElse(CusumState(0L, fired = false))
       var alarm: Option[CusumAlarm] = None
       rows.toSeq.sortBy(r => (r.ts_us, r.event_id)).foreach { r =>
         val s = math.max(0L, state.s + (r.v - k))
         val fires = !state.fired && s >= h
         if (fires && alarm.isEmpty)
-          alarm = Some(CusumAlarm(key, r.event_id, r.ts_us, s))
+          alarm = Some(CusumAlarm(user, r.event_id, r.ts_us, s))
         state = CusumState(s, state.fired || fires)
       }
-      st.update(state)
-      alarm.iterator
+      (state, alarm.iterator)
     }
-  }
-
-  def apply(ds: Dataset[CusumEvent], k: Long, h: Long): Dataset[CusumAlarm] = {
-    implicit val outEnc: Encoder[CusumAlarm] = Encoders.product[CusumAlarm]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new Processor(k, h), TimeMode.None(),
-        OutputMode.Append(), outEnc)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Ordered-sequence funnel as a keyed streaming state machine — the
   * incremental form of [[graft.queries.EventAnalytics.funnel]] (stream-job
@@ -30,46 +29,30 @@ object StreamFunnel {
   /** -1 = step not yet reached. */
   final case class FunnelState(t1: Long, t2: Long, t3: Long)
 
-  private final class Processor(s1: String, s2: String, s3: String,
-      horizonUs: Long)
-      extends StatefulProcessor[Long, FunnelEvent, StepHit] {
-
-    @transient private var st: ValueState[FunnelState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[FunnelState]("funnel",
-        Encoders.product[FunnelState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[FunnelEvent],
-        timerValues: TimerValues): Iterator[StepHit] = {
-      var s = if (st.exists()) st.get() else FunnelState(-1L, -1L, -1L)
+  def apply(ds: Dataset[FunnelEvent], s1: String, s2: String, s3: String,
+      horizonUs: Long): Dataset[StepHit] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold(ds, "funnel")(_.user_id) { (user, prev: Option[FunnelState], rows) =>
+      var s = prev.getOrElse(FunnelState(-1L, -1L, -1L))
       val out = scala.collection.mutable.ListBuffer.empty[StepHit]
       rows.toSeq.sortBy(r => (r.ts_us, r.event_id)).foreach { r =>
         if (s.t1 < 0) {
           if (r.event_type == s1) {
-            s = s.copy(t1 = r.ts_us); out += StepHit(key, 1, r.ts_us)
+            s = s.copy(t1 = r.ts_us); out += StepHit(user, 1, r.ts_us)
           }
         } else if (s.t2 < 0) {
           if (r.event_type == s2 && r.ts_us > s.t1) {
-            s = s.copy(t2 = r.ts_us); out += StepHit(key, 2, r.ts_us)
+            s = s.copy(t2 = r.ts_us); out += StepHit(user, 2, r.ts_us)
           }
         } else if (s.t3 < 0) {
           if (r.event_type == s3 && r.ts_us > s.t2 &&
               r.ts_us <= s.t1 + horizonUs) {
-            s = s.copy(t3 = r.ts_us); out += StepHit(key, 3, r.ts_us)
+            s = s.copy(t3 = r.ts_us); out += StepHit(user, 3, r.ts_us)
           }
         }
       }
-      st.update(s)
-      out.iterator
+      (s, out.iterator)
     }
-  }
-
-  def apply(ds: Dataset[FunnelEvent], s1: String, s2: String, s3: String,
-      horizonUs: Long): Dataset[StepHit] = {
-    implicit val outEnc: Encoder[StepHit] = Encoders.product[StepHit]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new Processor(s1, s2, s3, horizonUs),
-        TimeMode.None(), OutputMode.Append(), outEnc)
   }
 }

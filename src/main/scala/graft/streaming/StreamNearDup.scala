@@ -75,16 +75,7 @@ object StreamNearDup {
         bands0("doc_id") === col("__eid")).drop("__eid")
       case None => bands0
     }).persist()
-    // explicit existence check, not a broad AnalysisException catch: a
-    // CORRUPTED state dir must fail the batch loudly, not silently dedup
-    // against nothing
-    val stateRoot = new org.apache.hadoop.fs.Path(statePath)
-    val stateFs = stateRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasState = stateFs.exists(stateRoot) &&
-      stateFs.listStatus(stateRoot).exists(_.getPath.getName.startsWith("batch="))
-    val seen: Option[DataFrame] =
-      if (hasState) Some(spark.read.parquet(statePath).filter(col("batch") < batchId))
-      else None // first batch
+    val seen = BatchState.read(spark, statePath, batchId)
     // watermark-aligned expiry floor: a key is live iff et >= floor.
     // The watermark is the max event time over this batch AND every state
     // partition (read from the per-partition _MAX_ET sidecars — no state
@@ -103,7 +94,7 @@ object StreamNearDup {
       if (r.isNullAt(0)) None else Some(r.getLong(0))
     }
     val partMax: Map[Long, Long] =
-      if (eventTimeCol.isDefined && hasState) partitionMaxes(spark, statePath)
+      if (eventTimeCol.isDefined && seen.isDefined) partitionMaxes(spark, statePath)
       else Map.empty
     val floorOpt: Option[Long] = eventTimeCol.flatMap { _ =>
       (batchMaxOpt ++ partMax.values).maxOption.map(_ - retentionMs)
@@ -134,16 +125,22 @@ object StreamNearDup {
       case Some(_) => bands.groupBy("band", "k").agg(max("et").as("et"))
       case None => bands.select("band", "k").distinct()
     }
-    register.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    register.write.mode("overwrite").parquet(BatchState.dir(statePath, batchId))
     // per-partition max event time as a sidecar, so later batches derive
     // the watermark and the eviction set WITHOUT re-scanning state
     batchMaxOpt.foreach(mx =>
-      writeSidecar(spark, s"$statePath/batch=$batchId", mx))
+      writeSidecar(spark, BatchState.dir(statePath, batchId), mx))
     bands.unpersist()
-    evictExpired(spark, statePath, batchId, retainBatches)
+    // batch-count retention
+    if (retainBatches != Int.MaxValue)
+      BatchState.evict(spark, statePath)(_ < batchId - retainBatches + 1)
+    // time retention: a partition whose MAX event time fell behind the
+    // floor holds only expired keys. Row precision is the lookup filter's
+    // job; this is the disk-space half, from the sidecar maxes, no scan
     floorOpt.foreach { floor =>
-      val maxes = partMax ++ batchMaxOpt.map(batchId -> _)
-      evictExpiredByTime(spark, statePath, maxes, floor)
+      val expired = (partMax ++ batchMaxOpt.map(batchId -> _))
+        .filter { case (_, mx) => mx < floor }.keySet
+      if (expired.nonEmpty) BatchState.evict(spark, statePath)(expired)
     }
     kept
   }
@@ -164,58 +161,21 @@ object StreamNearDup {
     * driver-side file reads, no full state scan. */
   private def partitionMaxes(spark: org.apache.spark.sql.SparkSession,
       statePath: String): Map[Long, Long] = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Map.empty
-    fs.listStatus(root).flatMap { st =>
-      val name = st.getPath.getName
-      name.stripPrefix("batch=").toLongOption.filter(_ => name.startsWith("batch=")).flatMap { id =>
-        val sc = new org.apache.hadoop.fs.Path(st.getPath, SidecarName)
-        val fromSidecar: Option[Long] =
-          if (fs.exists(sc)) {
-            val in = fs.open(sc)
-            val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-            s.trim.toLongOption
-          } else None
-        fromSidecar.orElse {
-          val r = spark.read.parquet(st.getPath.toString).agg(max("et")).head()
-          if (r.isNullAt(0)) None else Some(r.getLong(0))
-        }.map(id -> _)
-      }
+    val fs = new org.apache.hadoop.fs.Path(statePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    BatchState.partitions(spark, statePath).flatMap { case (id, dir) =>
+      val sc = new org.apache.hadoop.fs.Path(dir, SidecarName)
+      val fromSidecar: Option[Long] =
+        if (fs.exists(sc)) {
+          val in = fs.open(sc)
+          val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+          s.trim.toLongOption
+        } else None
+      fromSidecar.orElse {
+        val r = spark.read.parquet(dir.toString).agg(max("et")).head()
+        if (r.isNullAt(0)) None else Some(r.getLong(0))
+      }.map(id -> _)
     }.toMap
-  }
-
-  /** Delete state partitions older than the batch-count retention window. */
-  private def evictExpired(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, batchId: Long, retainBatches: Int): Unit = {
-    if (retainBatches == Int.MaxValue) return
-    val floor = batchId - retainBatches + 1
-    deletePartitions(spark, statePath,
-      _.stripPrefix("batch=").toLongOption.exists(_ < floor))
-  }
-
-  /** Delete state partitions whose MAX event time fell behind the expiry
-    * floor — every key in them is expired, so the files are dead weight.
-    * Row-precision is already handled by the lookup filter; this is the
-    * disk-space half of the eviction. The per-partition maxes come from
-    * the sidecars collected this batch — no state scan here. */
-  private def evictExpiredByTime(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, partitionMax: Map[Long, Long], floor: Long): Unit = {
-    val expired = partitionMax.filter { case (_, mx) => mx < floor }.keySet
-    if (expired.nonEmpty)
-      deletePartitions(spark, statePath,
-        _.stripPrefix("batch=").toLongOption.exists(expired.contains))
-  }
-
-  private def deletePartitions(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, matches: String => Boolean): Unit = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("batch=") && matches(name)) fs.delete(st.getPath, true)
-    }
   }
 
   /** The front door as a ready writeStream: each micro-batch is near-dup

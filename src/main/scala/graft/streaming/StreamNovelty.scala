@@ -46,15 +46,7 @@ object StreamNovelty {
     val grams = batch.select(col(idCol).as("doc_id"),
       explode(call_function("graft_shingle_hashes", col(textCol),
         lit(k), lit(hashBase), lit(hashP))).as("gh")).persist()
-    // explicit existence check (a corrupted state dir must fail loudly,
-    // not silently score everything novel)
-    val stateRoot = new org.apache.hadoop.fs.Path(statePath)
-    val stateFs = stateRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasState = stateFs.exists(stateRoot) &&
-      stateFs.listStatus(stateRoot).exists(_.getPath.getName.startsWith("batch="))
-    val seen: Option[DataFrame] =
-      if (hasState) Some(spark.read.parquet(statePath).filter(col("batch") < batchId))
-      else None
+    val seen = BatchState.read(spark, statePath, batchId)
     // in-batch first occurrence: smallest doc_id per gram this batch
     val wg = Window.partitionBy("gh")
     val inBatchFirst = grams
@@ -86,7 +78,7 @@ object StreamNovelty {
     // batch >= batchId). Registering only the unseen set keeps state at
     // distinct-corpus size: a state-seen gram is already registered.
     newGrams.select("gh").write.mode("overwrite")
-      .parquet(s"$statePath/batch=$batchId")
+      .parquet(BatchState.dir(statePath, batchId))
     grams.unpersist()
     out
   }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Cohort retention as a keyed streaming state machine — the incremental
   * form of [[graft.queries.EventAnalytics.retention]] (stream-job framing
@@ -33,18 +32,11 @@ object StreamRetention {
 
   private final val DayUs = 86400L * 1000000L
 
-  private final class Processor
-      extends StatefulProcessor[Long, RetEvent, RetentionHit] {
-
-    @transient private var st: ValueState[RetState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[RetState]("retention",
-        Encoders.product[RetState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[RetEvent],
-        timerValues: TimerValues): Iterator[RetentionHit] = {
-      var s = if (st.exists()) st.get() else RetState(-1L, 0)
+  def apply(ds: Dataset[RetEvent]): Dataset[RetentionHit] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold(ds, "retention")(_.user_id) { (user, prev: Option[RetState], rows) =>
+      var s = prev.getOrElse(RetState(-1L, 0))
       val out = scala.collection.mutable.ListBuffer.empty[RetentionHit]
       // fold in event-time order within the batch so the first row seen for
       // a fresh user is its batch-min timestamp (the cohort rule)
@@ -55,18 +47,10 @@ object StreamRetention {
         val bit = Offsets.indexOf(off)
         if (bit >= 0 && (s.mask & (1 << bit)) == 0) {
           s = s.copy(mask = s.mask | (1 << bit))
-          out += RetentionHit(key, s.cohortS, off)
+          out += RetentionHit(user, s.cohortS, off)
         }
       }
-      st.update(s)
-      out.iterator
+      (s, out.iterator)
     }
-  }
-
-  def apply(ds: Dataset[RetEvent]): Dataset[RetentionHit] = {
-    implicit val outEnc: Encoder[RetentionHit] = Encoders.product[RetentionHit]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
-        outEnc)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Streaming RFM sufficient statistic — the online half of
   * [[graft.queries.EventAnalytics.rfm]] (stream-job framing per the
@@ -30,32 +29,16 @@ object StreamRfm {
   final case class RfmStats(user_id: Long, last_ts: Long, freq: Long,
       monetary_c: Long)
 
-  private final class Processor
-      extends StatefulProcessor[Long, RfmEvent, RfmStats] {
-
-    @transient private var st: ValueState[RfmStats] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[RfmStats]("rfm",
-        Encoders.product[RfmStats], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[RfmEvent],
-        timerValues: TimerValues): Iterator[RfmStats] = {
-      var s =
-        if (st.exists()) st.get() else RfmStats(key, Long.MinValue, 0L, 0L)
+  def apply(ds: Dataset[RfmEvent]): Dataset[RfmStats] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold(ds, "rfm")(_.user_id) { (user, prev: Option[RfmStats], rows) =>
+      var s = prev.getOrElse(RfmStats(user, Long.MinValue, 0L, 0L))
       rows.foreach { r =>
-        s = RfmStats(key, math.max(s.last_ts, r.ts_us), s.freq + 1L,
+        s = RfmStats(user, math.max(s.last_ts, r.ts_us), s.freq + 1L,
           s.monetary_c + r.cents)
       }
-      st.update(s)
-      Iterator.single(s)
+      (s, Iterator.single(s))
     }
-  }
-
-  def apply(ds: Dataset[RfmEvent]): Dataset[RfmStats] = {
-    implicit val outEnc: Encoder[RfmStats] = Encoders.product[RfmStats]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new Processor, TimeMode.None(),
-        OutputMode.Append(), outEnc)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Rolling 24-hour revenue peak as a keyed streaming state machine — the
   * incremental form of [[graft.queries.EventQueries.rolling24h]] (stream-job
@@ -42,18 +41,11 @@ object StreamRolling {
 
   private final val HourUs = 3600L * 1000000L
 
-  private final class Processor
-      extends StatefulProcessor[Long, RollEvent, RollPeak] {
-
-    @transient private var st: ValueState[RollState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[RollState]("roll24",
-        Encoders.product[RollState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[RollEvent],
-        timerValues: TimerValues): Iterator[RollPeak] = {
-      val s0 = if (st.exists()) st.get() else RollState(Nil, Nil, -1L, -1L)
+  def apply(ds: Dataset[RollEvent]): Dataset[RollPeak] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold(ds, "roll24")(_.user_id) { (user, prev: Option[RollState], rows) =>
+      val s0 = prev.getOrElse(RollState(Nil, Nil, -1L, -1L))
       val hours = scala.collection.mutable.ArrayBuffer.from(s0.hours)
       val sums = scala.collection.mutable.ArrayBuffer.from(s0.sums)
       var best = s0.best
@@ -68,15 +60,8 @@ object StreamRolling {
         while (i < hours.length) { roll += sums(i); i += 1 }
         if (roll > best || (roll == best && h < bestH)) { best = roll; bestH = h }
       }
-      st.update(RollState(hours.toSeq, sums.toSeq, best, bestH))
-      Iterator.single(RollPeak(key, best, bestH * 3600L))
+      (RollState(hours.toSeq, sums.toSeq, best, bestH),
+        Iterator.single(RollPeak(user, best, bestH * 3600L)))
     }
-  }
-
-  def apply(ds: Dataset[RollEvent]): Dataset[RollPeak] = {
-    implicit val outEnc: Encoder[RollPeak] = Encoders.product[RollPeak]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
-        outEnc)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** SCD2 change-history maintenance as a keyed streaming op — the
   * incremental form of [[graft.queries.EventAnalytics.scd2History]]: each
@@ -26,18 +25,11 @@ object StreamScd2 {
   final case class OpenRun(run_no: Long, attr: String, start_us: Long,
       n_events: Long)
 
-  private final class Processor
-      extends StatefulProcessor[Long, AttrEvent, RunRow] {
-
-    @transient private var st: ValueState[OpenRun] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[OpenRun]("run",
-        Encoders.product[OpenRun], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[AttrEvent],
-        timerValues: TimerValues): Iterator[RunRow] = {
-      var cur: OpenRun = if (st.exists()) st.get() else null
+  def apply(ds: Dataset[AttrEvent]): Dataset[RunRow] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold(ds, "run")(_.user_id) { (user, prev: Option[OpenRun], rows) =>
+      var cur: OpenRun = prev.orNull
       val out = scala.collection.mutable.ListBuffer.empty[RunRow]
       rows.toSeq.sortBy(r => (r.ts_us, r.event_id)).foreach { r =>
         if (cur == null) {
@@ -45,20 +37,12 @@ object StreamScd2 {
         } else if (r.event_type == cur.attr) {
           cur = cur.copy(n_events = cur.n_events + 1L)
         } else {
-          out += RunRow(key, cur.run_no, cur.attr, cur.start_us, r.ts_us,
+          out += RunRow(user, cur.run_no, cur.attr, cur.start_us, r.ts_us,
             cur.n_events)
           cur = OpenRun(cur.run_no + 1L, r.event_type, r.ts_us, 1L)
         }
       }
-      st.update(cur)
-      out.iterator
+      (cur, out.iterator)
     }
-  }
-
-  def apply(ds: Dataset[AttrEvent]): Dataset[RunRow] = {
-    implicit val outEnc: Encoder[RunRow] = Encoders.product[RunRow]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new Processor, TimeMode.None(),
-        OutputMode.Append(), outEnc)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Time-weighted average as a keyed streaming accumulator — the incremental
   * form of [[graft.queries.EventAnalytics.twap]]. State per key is four
@@ -23,18 +22,11 @@ object StreamTwap {
   final case class TwapRow(user_id: Long, twap_num: Long, twap_den: Long)
   final case class TwapState(last_ts: Long, last_v: Long, num: Long, den: Long)
 
-  private final class Processor
-      extends StatefulProcessor[Long, ValueEvent, TwapRow] {
-
-    @transient private var st: ValueState[TwapState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[TwapState]("twap",
-        Encoders.product[TwapState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[ValueEvent],
-        timerValues: TimerValues): Iterator[TwapRow] = {
-      var s = if (st.exists()) st.get() else null
+  def apply(ds: Dataset[ValueEvent]): Dataset[TwapRow] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    KeyedFold(ds, "twap")(_.user_id) { (user, prev: Option[TwapState], rows) =>
+      var s = prev.orNull
       rows.toSeq.sortBy(r => (r.ts_us, r.event_id)).foreach { r =>
         if (s == null) s = TwapState(r.ts_us, r.value_c, 0L, 0L)
         else {
@@ -43,19 +35,11 @@ object StreamTwap {
             s.num + s.last_v * dtMs, s.den + dtMs)
         }
       }
-      st.update(s)
       // no emission until a key has an actual time segment: the batch
       // query produces NO row for single-event users (its lead() filter),
       // so a (0,0) emission would break the latest-row == batch contract
-      if (s.den > 0L) Iterator.single(TwapRow(key, s.num, s.den))
-      else Iterator.empty
+      (s, if (s.den > 0L) Iterator.single(TwapRow(user, s.num, s.den))
+        else Iterator.empty)
     }
-  }
-
-  def apply(ds: Dataset[ValueEvent]): Dataset[TwapRow] = {
-    implicit val outEnc: Encoder[TwapRow] = Encoders.product[TwapRow]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new Processor, TimeMode.None(),
-        OutputMode.Append(), outEnc)
   }
 }

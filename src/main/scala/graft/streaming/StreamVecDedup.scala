@@ -69,9 +69,6 @@ object StreamVecDedup {
       .withColumn("n2", dot(col("v"), col("v")))
       .withColumn("bucket", graft.ops.VecDedup.bucketExpr(col("v"), dim, numPlanes))
       .persist()
-    // explicit existence check (StreamNearDup discipline): a corrupted
-    // state dir must fail the batch loudly, not silently dedup against
-    // nothing
     val stateRoot = new org.apache.hadoop.fs.Path(statePath)
     val stateFs = stateRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // an interrupted compaction leaves `_compact_tmp` holding the whole
@@ -79,13 +76,10 @@ object StreamVecDedup {
     // silently dedup without that span (ADVICE r20). Fail loudly with the
     // recovery step instead.
     val tmpMarker = new org.apache.hadoop.fs.Path(stateRoot, "_compact_tmp")
-    if (stateFs.exists(stateRoot))
-      require(!stateFs.exists(tmpMarker),
-        s"StreamVecDedup: $tmpMarker exists — an interrupted compaction " +
-          "left the compacted span there; recover by renaming it to " +
-          "batch=<its max source id> before processing further batches")
-    val hasState = stateFs.exists(stateRoot) &&
-      stateFs.listStatus(stateRoot).exists(_.getPath.getName.startsWith("batch="))
+    require(!stateFs.exists(tmpMarker),
+      s"StreamVecDedup: $tmpMarker exists — an interrupted compaction " +
+        "left the compacted span there; recover by renaming it to " +
+        "batch=<its max source id> before processing further batches")
     // state tier: bucket equi-join, exact cosine verify, smallest partner.
     // The new batch is the bounded side — broadcast it; the state side is
     // scanned, never shuffled (the IncrDedup ingest topology). The scan is
@@ -105,35 +99,27 @@ object StreamVecDedup {
     // stops paying — every bucket dir qualifies anyway — so it is skipped.
     val batchBuckets = e.select("bucket").distinct()
       .collect().map(_.getLong(0)).toSet
-    val statePaths: Seq[String] =
-      if (!hasState) Nil
-      else {
-        val pruneByBucket = batchBuckets.size <= PRUNE_MAX_BUCKETS
-        stateFs.listStatus(stateRoot).toIndexedSeq
-          .filter { st =>
-            val n = st.getPath.getName
-            n.startsWith("batch=") &&
-              n.stripPrefix("batch=").toLongOption.exists(_ < batchId)
-          }
-          .flatMap { bd =>
-            val children = stateFs.listStatus(bd.getPath).toIndexedSeq
-            // legacy (pre-bucket-partitioned) state: data files directly
-            // under batch=N with no bucket= subdirs. The bucket-pruned
-            // reader would collect ZERO paths from it and silently dedup
-            // against nothing (ADVICE r20) — fail loudly per the module's
-            // corrupted-state discipline.
-            require(children.isEmpty ||
-              children.exists(_.getPath.getName.startsWith("bucket=")),
-              s"StreamVecDedup: state dir ${bd.getPath} holds no bucket= " +
-                "subdirs (pre-bucket-partitioned legacy layout?) — rewrite " +
-                "it bucket-partitioned (read it, write with " +
-                "partitionBy(bucket)) before processing further batches")
-            children.filter { bs =>
-              val n = bs.getPath.getName
-              n.startsWith("bucket=") && (!pruneByBucket ||
-                n.stripPrefix("bucket=").toLongOption.exists(batchBuckets))
-            }.map(_.getPath.toString)
-          }
+    val pruneByBucket = batchBuckets.size <= PRUNE_MAX_BUCKETS
+    val statePaths: Seq[String] = BatchState.partitions(spark, statePath)
+      .filter(_._1 < batchId)
+      .flatMap { case (_, bd) =>
+        val children = stateFs.listStatus(bd).toIndexedSeq
+        // legacy (pre-bucket-partitioned) state: data files directly
+        // under batch=N with no bucket= subdirs. The bucket-pruned
+        // reader would collect ZERO paths from it and silently dedup
+        // against nothing (ADVICE r20) — fail loudly per the module's
+        // corrupted-state discipline.
+        require(children.isEmpty ||
+          children.exists(_.getPath.getName.startsWith("bucket=")),
+          s"StreamVecDedup: state dir $bd holds no bucket= " +
+            "subdirs (pre-bucket-partitioned legacy layout?) — rewrite " +
+            "it bucket-partitioned (read it, write with " +
+            "partitionBy(bucket)) before processing further batches")
+        children.filter { bs =>
+          val n = bs.getPath.getName
+          n.startsWith("bucket=") && (!pruneByBucket ||
+            n.stripPrefix("bucket=").toLongOption.exists(batchBuckets))
+        }.map(_.getPath.toString)
       }
     val stateHits =
       if (statePaths.nonEmpty) {
@@ -174,17 +160,10 @@ object StreamVecDedup {
     e.select("bucket", "vec_id", "v", "n2")
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$statePath/batch=$batchId")
+      .parquet(BatchState.dir(statePath, batchId))
     e.unpersist()
-    if (retainBatches != Int.MaxValue) {
-      val floor = batchId - retainBatches + 1
-      if (stateFs.exists(stateRoot)) stateFs.listStatus(stateRoot).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("batch=") &&
-            name.stripPrefix("batch=").toLongOption.exists(_ < floor))
-          stateFs.delete(st.getPath, true)
-      }
-    }
+    if (retainBatches != Int.MaxValue)
+      BatchState.evict(spark, statePath)(_ < batchId - retainBatches + 1)
     out
   }
 
@@ -217,15 +196,7 @@ object StreamVecDedup {
       upToBatch: Long): Long = {
     val stateRoot = new org.apache.hadoop.fs.Path(statePath)
     val fs = stateRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(stateRoot)) return -1L
-    val old = fs.listStatus(stateRoot).toIndexedSeq
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch="))
-          n.stripPrefix("batch=").toLongOption
-            .filter(_ < upToBatch).map(_ -> st.getPath)
-        else None
-      }.sortBy(_._1)
+    val old = BatchState.partitions(spark, statePath).filter(_._1 < upToBatch)
     if (old.size < 2) return -1L
     val snapId = old.last._1
     val tmp = new org.apache.hadoop.fs.Path(stateRoot, "_compact_tmp")
@@ -242,7 +213,7 @@ object StreamVecDedup {
     // reads min(sid) over duplicates, unchanged; a crash anywhere after
     // the rename loses nothing, and a crash before it is caught loudly by
     // processBatch's `_compact_tmp` guard.
-    val target = new org.apache.hadoop.fs.Path(stateRoot, s"batch=$snapId")
+    val target = new org.apache.hadoop.fs.Path(BatchState.dir(statePath, snapId))
     fs.delete(target, true)
     require(fs.rename(tmp, target),
       s"compact: rename ${tmp} -> ${target} failed; recover manually")

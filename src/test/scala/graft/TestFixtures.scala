@@ -195,8 +195,8 @@ object SparkSpec {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", 4)
-      // transformWithState (EmaState/ControlGate/TtlDedup/CountWindows/SBF)
-      // requires the RocksDB state store provider
+      // transformWithState (KeyedFold, TtlDedup, AllowedLateness,
+      // StreamResample) requires the RocksDB state store provider
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()

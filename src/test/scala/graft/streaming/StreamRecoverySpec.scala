@@ -80,9 +80,9 @@ class StreamRecoverySpec extends SparkSpec {
     latest.exceptAll(batch).count() shouldBe 0L
   }
 
-  // The three twins of the stream benchmark, restarted from the checkpoint
-  // after every micro-batch: every row their sinks receive must equal the
-  // uninterrupted run's. 327 events (5 of the 15 users, whole histories) in
+  // Keyed-state twins, restarted from the checkpoint after every
+  // micro-batch: every row their sinks receive must equal the uninterrupted
+  // run's. 327 events (5 of the 15 users, whole histories) in
   // 4 event-time-ordered files.
   private def restartMatchesUninterrupted(name: String, cols: Seq[Column])(
       twin: DataFrame => Dataset[_]): Unit = {
@@ -117,6 +117,50 @@ class StreamRecoverySpec extends SparkSpec {
     import spark.implicits._
     restartMatchesUninterrupted("scd2", attrCols) { df =>
       StreamScd2(df.as[StreamScd2.AttrEvent])
+    }
+  }
+
+  private val centsCols = Seq(col("event_id"), col("ts_us"), col("user_id"),
+    Q.cents(col("value")).as("cents"))
+
+  it should "give StreamRetention's uninterrupted sink rows across a restart at every micro-batch" in {
+    import spark.implicits._
+    restartMatchesUninterrupted("retention",
+        Seq("event_id", "ts_us", "user_id").map(col)) { df =>
+      StreamRetention(df.as[StreamRetention.RetEvent])
+    }
+  }
+
+  it should "give StreamRolling's uninterrupted sink rows across a restart at every micro-batch" in {
+    import spark.implicits._
+    restartMatchesUninterrupted("rolling", centsCols) { df =>
+      StreamRolling(df.as[StreamRolling.RollEvent])
+    }
+  }
+
+  it should "give StreamCusum's uninterrupted sink rows across a restart at every micro-batch" in {
+    import spark.implicits._
+    // StreamCusumSpec's reference pair: k = the mean event value, h = 5k
+    lazy val k = Q.events(spark, sfDir).select(Q.cents(col("value")).as("v"))
+      .agg(expr("sum(v) div count(*)")).head().getLong(0)
+    restartMatchesUninterrupted("cusum", centsCols) { df =>
+      StreamCusum(df.withColumnRenamed("cents", "v").as[StreamCusum.CusumEvent],
+        k, 5 * k)
+    }
+  }
+
+  it should "give StreamAttribution's uninterrupted sink rows across a restart at every micro-batch" in {
+    import spark.implicits._
+    restartMatchesUninterrupted("attribution", attrCols) { df =>
+      StreamAttribution(df.as[StreamAttribution.AttrEvent])
+    }
+  }
+
+  it should "give StreamAnomaly's uninterrupted sink rows across a restart at every micro-batch" in {
+    import spark.implicits._
+    restartMatchesUninterrupted("anomaly", Seq(col("event_id"), col("ts_us"),
+        col("event_type"), Q.cents(col("value")).as("x"))) { df =>
+      StreamAnomaly(df.select("event_id", "event_type", "x").as[StreamAnomaly.ValueEvent])
     }
   }
 }
