@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -89,13 +88,11 @@ object LabelProp {
   private def runDistributed(nodes: DataFrame, e: DataFrame,
       iters: Int): DataFrame = {
     var labels = nodes.select(col("node")).withColumn("lbl", col("node"))
-    val rnW = Window.partitionBy("u").orderBy(col("sw_").desc, col("lbl"))
     for (_ <- 1 to iters) {
-      val top = e
-        .join(labels.select(col("node").as("v2"), col("lbl")), col("v") === col("v2"))
-        .groupBy(col("u"), col("lbl")).agg(sum("w").as("sw_"))
-        .withColumn("rn", row_number().over(rnW))
-        .filter(col("rn") === 1)
+      val top = TopK.perGroup(e
+          .join(labels.select(col("node").as("v2"), col("lbl")), col("v") === col("v2"))
+          .groupBy(col("u"), col("lbl")).agg(sum("w").as("sw_")),
+        "u", Seq(col("sw_").desc, col("lbl")), 1, "rn")
         .select(col("u").as("node2"), col("lbl").as("nlbl"))
       labels = nodes.select("node").join(top, col("node") === col("node2"), "left")
         .select(col("node"), coalesce(col("nlbl"), col("node")).as("lbl"))

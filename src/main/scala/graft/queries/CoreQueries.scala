@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.TopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -225,11 +226,8 @@ object CoreQueries {
 
   /** Ranking window function: top-3 orders per customer. */
   def rankPerCustomer(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    t(s, dir, "orders")
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
+    TopK.perGroup(t(s, dir, "orders"), "o_custkey",
+        Seq(col("o_totalprice").desc, col("o_orderkey")), 3, "rn")
       .select(col("o_custkey"), col("rn"), col("o_orderkey"),
         cents(col("o_totalprice")).as("price_c"))
       .orderBy("o_custkey", "rn")

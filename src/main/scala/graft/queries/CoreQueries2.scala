@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.TopK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Q._
@@ -343,14 +344,10 @@ object CoreQueries2 {
     * turns the rank-≤-N predicate into a per-partition top-N sort
     * (WindowGroupLimit), never a full per-group sort. */
   def topPerGroup(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val pc = cents(col("o_totalprice"))
-    val w = Window.partitionBy("o_custkey").orderBy(col("price_c").desc,
-      col("o_orderkey"))
-    t(s, dir, "orders")
-      .select(col("o_custkey"), col("o_orderkey"), pc.as("price_c"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 2)
+    TopK.perGroup(t(s, dir, "orders")
+        .select(col("o_custkey"), col("o_orderkey"), pc.as("price_c")),
+      "o_custkey", Seq(col("price_c").desc, col("o_orderkey")), 2, "rnk")
       .orderBy("o_custkey", "rnk")
   }
 

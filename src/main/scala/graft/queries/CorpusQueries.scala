@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.TopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,11 +74,9 @@ object CorpusQueries {
         broadcast(dfreqPlan)
       else graft.ops.LocalOrDistributed.broadcastIfAtMost(
         graft.util.CacheBin.persist(dfreqPlan), vocabBroadcastMaxRows)
-    val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
-    tf.join(dfr, "term")
-      .withColumn("score", col("tf") * expr(s"(${nd0}L * 1000000) div df"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
+    TopK.perGroup(tf.join(dfr, "term")
+        .withColumn("score", col("tf") * expr(s"(${nd0}L * 1000000) div df")),
+      "doc_id", Seq(col("score").desc, col("term")), 3, "rank")
       .select(col("doc_id"), col("rank"), col("term"), col("tf"), col("df"), col("score"))
       .orderBy("doc_id", "rank")
   }
@@ -482,7 +481,7 @@ object CorpusQueries {
     * the identical selection without the per-domain sort); the report joins
     * two domain-sized aggregates. */
   def urlDedup(s: SparkSession, dir: String): DataFrame = {
-    val CAP = 10L
+    val CAP = 10
     val u = expr("doc_id div 3")
     val raw = concat(
       when(col("doc_id") % 2 === 0, lit("HTTPS://WWW.")).otherwise(lit("http://")),
@@ -498,12 +497,10 @@ object CorpusQueries {
     val mentions = base.groupBy("host")
       .agg(count(lit(1)).as("n_docs"), countDistinct(col("url")).as("n_urls"))
     val dedup = base.groupBy("host", "url").agg(min("doc_id").as("doc_id"))
-    val wHost = Window.partitionBy("host").orderBy(col("h"), col("doc_id"))
-    val kept = dedup
-      .withColumn("h", graft.ops.NearDup.polyHash(
-        concat(lit("url:"), col("doc_id").cast("string")), 31L, 1000000007L))
-      .withColumn("rn", row_number().over(wHost).cast("long"))
-      .filter(col("rn") <= CAP)
+    val kept = TopK.perGroup(dedup
+        .withColumn("h", graft.ops.NearDup.polyHash(
+          concat(lit("url:"), col("doc_id").cast("string")), 31L, 1000000007L)),
+      "host", Seq(col("h"), col("doc_id")), CAP, "rn")
       .groupBy("host")
       .agg(count(lit(1)).as("n_kept"),
         min("doc_id").as("first_kept"), max("doc_id").as("last_kept"))

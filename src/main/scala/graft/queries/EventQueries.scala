@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.TopK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -354,16 +355,15 @@ object EventQueries {
     val e = events(s, dir)
       .select(col("user_id"), col("ts_us"), col("event_id"), valC.as("v"))
     val kdf = e.agg(expr("sum(v) div count(*)").cast("long").as("k"))
-    val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    e.crossJoin(broadcast(kdf))
-      .withColumn("d", col("v") - col("k"))
-      .withColumn("p", sum("d").over(run))
-      .withColumn("s", col("p") -
-        least(lit(0L), min(col("p")).over(run)))
-      .filter(col("s") >= col("k") * 5)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val run = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    TopK.perGroup(e.crossJoin(broadcast(kdf))
+        .withColumn("d", col("v") - col("k"))
+        .withColumn("p", sum("d").over(run))
+        .withColumn("s", col("p") -
+          least(lit(0L), min(col("p")).over(run)))
+        .filter(col("s") >= col("k") * 5),
+      "user_id", Seq(col("ts_us"), col("event_id")), 1, "rn")
       .select(col("user_id"), col("event_id").as("alarm_event_id"),
         col("ts_us").as("alarm_ts_us"), col("s").as("s_cents"))
       .orderBy("user_id")

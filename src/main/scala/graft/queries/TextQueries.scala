@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.TopK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Q._
@@ -1428,7 +1429,6 @@ object TextQueries {
       "((22000 * tf * ltot) div (10 * tf * ltot + 3 * ltot + 9 * dl * nd))"
 
   def hybridSearch(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val tf = bm25TfIndex(s, dir)
     // corpus totals: N over documents; L = Σ tf (total token count) —
     // memoized scalars of the index artifact, inlined as literals (see
@@ -1459,11 +1459,9 @@ object TextQueries {
     // join and the query-term df restriction), and each unpersisted
     // evaluation would pay the probe filter + window over the full index
     val qt = graft.util.CacheBin.persist(
-      tf.filter(col("doc_id").isin(probeIds: _*))
-        .withColumn("q_id", col("doc_id"))
-        .withColumn("tr", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("tf").desc, col("term"))))
-        .filter(col("tr") <= HS_TERMS)
+      TopK.perGroup(tf.filter(col("doc_id").isin(probeIds: _*))
+          .withColumn("q_id", col("doc_id")),
+        "q_id", Seq(col("tf").desc, col("term")), HS_TERMS, "tr")
         .select(col("q_id"), col("term").as("qterm")))
     // per-QUERY-TERM df only (the retrievalEval pattern): the full df
     // table is vocabulary-sized — unbroadcastable at crawl scale (Heaps'
@@ -1475,15 +1473,12 @@ object TextQueries {
         col("term") === col("dterm"))
       .groupBy("dterm").agg(count(lit(1)).as("df"))
     // postings join → per-term integer BM25 scores → per-doc integer sum
-    val lex = broadcast(qt).join(tf, col("qterm") === col("term"))
-      .join(broadcast(qdf), col("qterm") === col("dterm"))
-      .withColumn("nd", lit(ndTot)).withColumn("ltot", lit(ltotTot))
-      .withColumn("s", expr(bm25ScoreExpr))
-      .groupBy("q_id", "doc_id").agg(sum("s").as("score"))
-      .withColumn("lex_rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("score").desc, col("doc_id")))
-        .cast("long"))
-      .filter(col("lex_rank") <= HS_POOL)
+    val lex = TopK.perGroup(broadcast(qt).join(tf, col("qterm") === col("term"))
+        .join(broadcast(qdf), col("qterm") === col("dterm"))
+        .withColumn("nd", lit(ndTot)).withColumn("ltot", lit(ltotTot))
+        .withColumn("s", expr(bm25ScoreExpr))
+        .groupBy("q_id", "doc_id").agg(sum("s").as("score")),
+      "q_id", Seq(col("score").desc, col("doc_id")), HS_POOL, "lex_rank")
       .select(col("q_id"), col("doc_id"), col("lex_rank"))
     // dense ranker: candidates routed through the IVF index's cell
     // equi-join (VectorQueries.ivfProbeCandidates, nprobe = HS_NPROBE) and
@@ -1497,22 +1492,16 @@ object TextQueries {
     // all 10 cells at sf0.01 but only 2 at the 100× tier, where cells
     // actually concentrate; the vec_ann_recall contract is the family's
     // monitor).
-    val vr = VectorQueries.ivfProbeCandidates(s, dir, probeIds, HS_NPROBE)
-      .withColumn("vec_rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cosine").desc, col("doc_id")))
-        .cast("long"))
-      .filter(col("vec_rank") <= HS_POOL)
+    val vr = TopK.perGroup(VectorQueries.ivfProbeCandidates(s, dir, probeIds, HS_NPROBE),
+        "q_id", Seq(col("cosine").desc, col("doc_id")), HS_POOL, "vec_rank")
       .select(col("q_id"), col("doc_id"), col("vec_rank"))
     // reciprocal-rank fusion in integer micro-units; absent-from-one-list
     // contributes 0 (and reports rank 0 in the output)
-    lex.join(vr, Seq("q_id", "doc_id"), "full_outer")
-      .withColumn("rrf_micro",
-        coalesce(expr("1000000 div (60 + lex_rank)"), lit(0L)) +
-          coalesce(expr("1000000 div (60 + vec_rank)"), lit(0L)))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("rrf_micro").desc, col("doc_id")))
-        .cast("long"))
-      .filter(col("rank") <= HS_K)
+    TopK.perGroup(lex.join(vr, Seq("q_id", "doc_id"), "full_outer")
+        .withColumn("rrf_micro",
+          coalesce(expr("1000000 div (60 + lex_rank)"), lit(0L)) +
+            coalesce(expr("1000000 div (60 + vec_rank)"), lit(0L))),
+      "q_id", Seq(col("rrf_micro").desc, col("doc_id")), HS_K, "rank")
       .select(col("q_id"), col("rank"), col("doc_id"), col("rrf_micro"),
         coalesce(col("lex_rank"), lit(0L)).as("lex_rank"),
         coalesce(col("vec_rank"), lit(0L)).as("vec_rank"))
@@ -1660,12 +1649,9 @@ object TextQueries {
     // df ≥ 2: a df-1 term occurs ONLY in the query doc itself — it can
     // retrieve nothing, so admitting it (typo/unique-token noise) wastes
     // query slots; df ≥ 2 picks exactly the rare-but-SHARED vocabulary
-    val qt = qtf.join(broadcast(qdf.filter(col("df") >= 2L)),
-        col("term") === col("qv"))
-      .withColumn("tr", row_number().over(
-        Window.partitionBy("q_id")
-          .orderBy(col("df").asc, col("qtf").desc, col("term"))))
-      .filter(col("tr") <= QE_TERMS)
+    val qt = TopK.perGroup(qtf.join(broadcast(qdf.filter(col("df") >= 2L)),
+        col("term") === col("qv")),
+      "q_id", Seq(col("df").asc, col("qtf").desc, col("term")), QE_TERMS, "tr")
       .select(col("q_id"), col("term").as("qterm"), col("df"), col("qtf"))
     val scored = broadcast(qt).join(tf, col("qterm") === col("term"))
       .filter(col("doc_id") =!= col("q_id")) // self-retrieval is not an answer

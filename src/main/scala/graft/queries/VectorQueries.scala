@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.LocalOrDistributed
+import graft.ops.{LocalOrDistributed, TopK}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -211,15 +211,18 @@ object VectorQueries {
     val q = e.filter(col("vec_id") <= idAtRank(e, dir, 10))
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn"))
     val c = e.select(col("vec_id").as("n_id"), col("v").as("nv"), col("n2").as("nn"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))
-    q.join(c, col("q_id") =!= col("n_id"))
+    probeTopK(q.join(c, col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"),
-        (dot(col("qv"), col("nv")) / (sqrt(col("qn")) * sqrt(col("nn")))).as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("n_id"), col("cosine"))
-      .orderBy("q_id", "rank")
+        (dot(col("qv"), col("nv")) / (sqrt(col("qn")) * sqrt(col("nn")))).as("cosine")),
+      "cosine", 5)
   }
+
+  /** The ANN output tail: each probe's top `k` candidates by (`score` desc,
+    * n_id) as (q_id, rank, n_id, score), ordered by probe and rank. */
+  private def probeTopK(cand: DataFrame, score: String, k: Int): DataFrame =
+    TopK.perGroup(cand, "q_id", Seq(col(score).desc, col("n_id")), k, "rank")
+      .select(col("q_id"), col("rank"), col("n_id"), col(score))
+      .orderBy("q_id", "rank")
 
   val annTopKSql: String =
     s"""WITH e AS (SELECT vec_id, embedding, ${dotSql("embedding", "embedding")} n2 FROM embeddings),
@@ -246,12 +249,10 @@ object VectorQueries {
         col("bucket").as("qb"))
     val c = e.select(col("vec_id").as("n_id"), col("v").as("nv"), col("n2").as("nn"),
       col("bucket").as("nb"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))
-    q.join(c, col("qb") === col("nb") && col("q_id") =!= col("n_id"))
+    TopK.perGroup(q.join(c, col("qb") === col("nb") && col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("qb").as("bucket"), col("n_id"),
-        (dot(col("qv"), col("nv")) / (sqrt(col("qn")) * sqrt(col("nn")))).as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
+        (dot(col("qv"), col("nv")) / (sqrt(col("qn")) * sqrt(col("nn")))).as("cosine")),
+      "q_id", Seq(col("cosine").desc, col("n_id")), 3, "rank")
       .select(col("q_id"), col("bucket"), col("rank"), col("n_id"), col("cosine"))
       .orderBy("q_id", "rank")
   }
@@ -354,13 +355,11 @@ object VectorQueries {
       col("n2").as("an"))
     val bs = e.select(col("vec_id").as("nbr_id"), col("v").as("bv"),
       col("n2").as("bn"))
-    val w = Window.partitionBy("node_id").orderBy(col("cosine").desc, col("nbr_id"))
-    cand.join(a, "node_id").join(bs, "nbr_id")
+    TopK.perGroup(cand.join(a, "node_id").join(bs, "nbr_id")
       .select(col("node_id"), col("nbr_id"),
         (dot(col("av"), col("bv")) / (sqrt(col("an")) * sqrt(col("bn"))))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= KNN_K)
+          .as("cosine")),
+      "node_id", Seq(col("cosine").desc, col("nbr_id")), KNN_K, "rank")
       .select(col("node_id"), col("rank"), col("nbr_id"), col("cosine"))
       .orderBy("node_id", "rank")
   }
@@ -406,10 +405,11 @@ object VectorQueries {
   /** IVF-flat ANN (the other classic scale path beside LSH): a coarse
     * quantizer of per-label mean vectors (full 64 dims, exact micro-unit
     * sums so the centroids are bit-identical across engines), every vector
-    * assigned to its nearest centroid cell, queries probing their
-    * `nprobe = 4` nearest cells and ranking candidates by exact cosine
-    * (multi-probe routing is THE recall knob of an IVF index — Jégou et
-    * al. 2011 §5; measured recall@5 here: 36% → 64% going 2 → 4 probes).
+    * assigned to its nearest centroid cell ([[ivfFront]]), queries probing
+    * their `IVF_NPROBE` nearest cells ([[ivfRoutedCandidates]]) and ranking
+    * candidates by exact cosine (multi-probe routing is THE recall knob of
+    * an IVF index — Jégou et al. 2011 §5; measured recall@5 here: 36% →
+    * 64% going 2 → 4 probes).
     *
     * Scale shape: the codebook is tiny BY DESIGN (that is what makes IVF
     * work), so it is computed in one map-side-combined groupBy and COLLECTED
@@ -421,8 +421,8 @@ object VectorQueries {
     * O(n/cells · nprobe), never O(n²). */
   def annIvf(s: SparkSession, dir: String): DataFrame = annIvf(s, dir, IVF_NPROBE)
 
-  /** Coarse quantizer codebook shared by [[annIvf]] / [[annIvfPq]] /
-    * [[annSq]] / [[ivfProbeCandidates]]: per-label mean vectors as EXACT
+  /** Coarse quantizer codebook of [[ivfFront]], the cell assignment every
+    * IVF-routed query reads: per-label mean vectors as EXACT
     * integer micro-unit sums — ONE groupBy with 64 integer-sum aggregates
     * (map-side combined; no 64× posexplode blowup, no collect_list), so
     * aggregation order cannot change the centroids and they are
@@ -430,8 +430,8 @@ object VectorQueries {
     * IS label order (what makes nearestCodes' lower-index tie-break match
     * the SQL mirror's `clabel` tie-break). Tiny by design — collected,
     * then broadcast into narrow assignment maps. Memoized per data
-    * fingerprint: the four IVF-routed operators built against one tier in
-    * one JVM share one codebook job. */
+    * fingerprint: the IVF-routed queries built against one tier in one JVM
+    * share one codebook job. */
   private def coarseCodebook(s: SparkSession,
       dir: String): (Array[Long], Array[Array[Double]]) =
     graft.util.Memo.scalar("coarse_codebook", embKey(dir)) {
@@ -479,6 +479,27 @@ object VectorQueries {
     (centRows.map(_.getLong(0)), centRows.map(_.getSeq[Double](1).toArray))
   }
 
+  /** The IVF front every routed index reads: the embedding frame as
+    * (vec_id, vlabel, v, n2, cells), where `cells` holds the vector's
+    * `nprobe` nearest coarse cells as labels, nearest first, so `cells[1]`
+    * is its home cell. The ranking is (cosine desc, label asc):
+    * graft_nearest_codes keeps ties on the lower index, and index order IS
+    * label order ([[coarseCodebook]] sorts by label), which matches the
+    * oracles' `crank` window. Not persisted (round-22 A/B: caching the
+    * array<double> + cells projection costs more than the narrow rescans
+    * it saves). */
+  private def ivfFront(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
+    val (labels, cvecs) = coarseCodebook(s, dir)
+    val idxToLabel = typedlit(labels.toSeq)
+    tPar(s, dir, "embeddings")
+      .select(col("vec_id"), col("label").cast("long").as("vlabel"),
+        vecD(col("embedding")).as("v"))
+      .withColumn("n2", dot(col("v"), col("v")))
+      .withColumn("cells", transform(
+        nearestCodes(col("v"), cvecs, nprobe, "cosine"),
+        i => element_at(idxToLabel, (i + lit(1)).cast("int"))))
+  }
+
   /** IVF-routed exact-cosine candidates for a FIXED probe-id set — the
     * cell-equi-join core of [[annIvf]], exported for hybrid retrieval's
     * dense ranker ([[graft.queries.TextQueries.hybridSearch]]): each
@@ -494,31 +515,19 @@ object VectorQueries {
     * scan. */
   def ivfProbeCandidates(s: SparkSession, dir: String, probeIds: Seq[Long],
       nprobe: Int): DataFrame =
-    ivfRoutedCandidates(s, dir, nprobe,
-      (e, _) => e.filter(col("vec_id").isin(probeIds: _*)))
+    ivfRoutedCandidates(s, dir, nprobe, _.filter(col("vec_id").isin(probeIds: _*)))
 
   /** Shared IVF routing core: `probeSel` picks the probe rows out of the
-    * persisted embedding frame (second arg = the frame for idAtRank-style
-    * bounded scalar lookups). Output carries both sides' class labels so
+    * [[ivfFront]] frame. Output carries both sides' class labels so
     * consumers like [[hardNegatives]] can split candidates by label without
     * a second join against the (corpus-sized) embedding table. */
   private def ivfRoutedCandidates(s: SparkSession, dir: String, nprobe: Int,
-      probeSel: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val (labels, cvecs) = coarseCodebook(s, dir)
-    val idxToLabel = typedlit(labels.toSeq)
-    // round-22 A/B: not persisted — see annIvfPq (the two consumers'
-    // narrow recomputes beat the array-cache build)
-    val e = tPar(s, dir, "embeddings")
-      .select(col("vec_id"), col("label").cast("long").as("vlabel"),
-        vecD(col("embedding")).as("v"))
-      .withColumn("n2", dot(col("v"), col("v")))
-      .withColumn("cells", transform(
-        nearestCodes(col("v"), cvecs, nprobe, "cosine"),
-        i => element_at(idxToLabel, (i + lit(1)).cast("int"))))
+      probeSel: DataFrame => DataFrame): DataFrame = {
+    val e = ivfFront(s, dir, nprobe)
     val cells = e.select(col("vec_id").as("n_id"),
       col("vlabel").as("doc_label"), col("v").as("nv"),
       col("n2").as("nn"), element_at(col("cells"), 1).as("cell"))
-    val probes = probeSel(e, e)
+    val probes = probeSel(e)
       .select(col("vec_id").as("q_id"), col("vlabel").as("q_label"),
         col("v").as("qv"), col("n2").as("qn"),
         explode(slice(col("cells"), 1, nprobe)).as("probe"))
@@ -527,6 +536,38 @@ object VectorQueries {
         col("doc_label"),
         (dot(col("qv"), col("nv")) / (sqrt(col("qn")) * sqrt(col("nn"))))
           .as("cosine"))
+  }
+
+  /** The 10 smallest-id probes' IVF candidates, the probe itself excluded:
+    * the candidate set of [[annIvf]] and [[hardNegatives]]. */
+  private def ivfAnnCandidates(s: SparkSession, dir: String, nprobe: Int): DataFrame =
+    ivfRoutedCandidates(s, dir, nprobe,
+      e => e.filter(col("vec_id") <= idAtRank(e, dir, 10)))
+      .filter(col("q_id") =!= col("doc_id"))
+
+  /** The 10 smallest-id probes of an [[ivfFront]] frame, one row per probed
+    * cell: (q_id, qv, probe). The probe side of the quantized indexes. */
+  private def ivfProbes(e: DataFrame, dir: String, nprobe: Int): DataFrame =
+    e.filter(col("vec_id") <= idAtRank(e, dir, 10))
+      .select(col("vec_id").as("q_id"), col("v").as("qv"),
+        explode(slice(col("cells"), 1, nprobe)).as("probe"))
+
+  /** The exact re-rank shared by the quantized indexes ([[annIvfPq]],
+    * [[annSq]], [[annHamming]]) — IVFADC+R (Jégou, Tavenard, Douze,
+    * Amsaleg, "Searching in one billion vectors: re-rank with source
+    * coding", ICASSP 2011): the approximate shortlist's (q_id, qv, n_id)
+    * rows fetch their candidates' full vectors from `e` (vec_id, v), are
+    * scored by exact fold-dot cosine and keep each probe's top 5. Only the
+    * shortlist ever reads a full candidate vector, and it is broadcast, so
+    * the static plan is a BroadcastHashJoin against the vector table
+    * (GraftPlanSpec asserts this), not an AQE-rescued sort-merge. */
+  private def exactRerank(short: DataFrame, e: DataFrame): DataFrame = {
+    val exact = e.select(col("vec_id").as("n_id"), col("v").as("nv"))
+    probeTopK(broadcast(short).join(exact, "n_id")
+      .select(col("q_id"), col("n_id"),
+        (dot(col("qv"), col("nv")) /
+          (sqrt(dot(col("qv"), col("qv"))) * sqrt(dot(col("nv"), col("nv"))))).as("score")),
+      "score", 5)
   }
 
   /** Contrastive-pair mining for embedding-model training data: for each
@@ -541,16 +582,13 @@ object VectorQueries {
     * candidate in its probed cells drops (inner join), mirrored by the
     * oracle. */
   def hardNegatives(s: SparkSession, dir: String): DataFrame = {
-    val cand = graft.util.CacheBin.persist(
-      ivfRoutedCandidates(s, dir, IVF_NPROBE,
-        (probes, e) => probes.filter(col("vec_id") <= idAtRank(e, dir, 10)))
-        .filter(col("q_id") =!= col("doc_id")))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("doc_id"))
-    val pos = cand.filter(col("q_label") === col("doc_label"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+    val cand = graft.util.CacheBin.persist(ivfAnnCandidates(s, dir, IVF_NPROBE))
+    def hardest(side: Column): DataFrame =
+      TopK.perGroup(cand.filter(side), "q_id",
+        Seq(col("cosine").desc, col("doc_id")), 1, "rk")
+    val pos = hardest(col("q_label") === col("doc_label"))
       .select(col("q_id"), col("doc_id").as("pos_id"), col("cosine").as("pos_cos"))
-    val neg = cand.filter(col("q_label") =!= col("doc_label"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+    val neg = hardest(col("q_label") =!= col("doc_label"))
       .select(col("q_id").as("qn"), col("doc_id").as("neg_id"),
         col("cosine").as("neg_cos"))
     pos.join(neg, col("q_id") === col("qn"))
@@ -599,35 +637,9 @@ object VectorQueries {
        |       CAST(round((pos_cos - neg_cos) * 1000000) AS BIGINT) margin_micro
        |FROM ps JOIN ng USING (q_id) ORDER BY q_id""".stripMargin
 
-  def annIvf(s: SparkSession, dir: String, NPROBE: Int): DataFrame = {
-    val (labels, cvecs) = coarseCodebook(s, dir)
-    // top-NPROBE nearest cells of one vector, by (cosine desc, label asc) —
-    // graft_nearest_codes keeps ties on the lower index, and index order IS
-    // label order (coarseCodebook sorts by clabel), so the ranking matches the
-    // old window / UDF exactly; indices map to labels via a literal lookup
-    val idxToLabel = typedlit(labels.toSeq)
-    // round-22 A/B: not persisted — see annIvfPq
-    val e = tPar(s, dir, "embeddings")
-      .select(col("vec_id"), vecD(col("embedding")).as("v"))
-      .withColumn("n2", dot(col("v"), col("v")))
-      .withColumn("cells", transform(
-        nearestCodes(col("v"), cvecs, NPROBE, "cosine"),
-        i => element_at(idxToLabel, (i + lit(1)).cast("int"))))
-    val cells = e.select(col("vec_id").as("n_id"), col("v").as("nv"),
-      col("n2").as("nn"), element_at(col("cells"), 1).as("cell"))
-    val probes = e.filter(col("vec_id") <= idAtRank(e, dir, 10))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn"),
-        explode(slice(col("cells"), 1, NPROBE)).as("probe"))
-
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))
-    broadcast(probes).join(cells, col("probe") === col("cell") && col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        (dot(col("qv"), col("nv")) / (sqrt(col("qn")) * sqrt(col("nn")))).as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("n_id"), col("cosine"))
-      .orderBy("q_id", "rank")
-  }
+  def annIvf(s: SparkSession, dir: String, NPROBE: Int): DataFrame =
+    probeTopK(ivfAnnCandidates(s, dir, NPROBE)
+      .select(col("q_id"), col("doc_id").as("n_id"), col("cosine")), "cosine", 5)
 
   val annIvfSql: String =
     s"""WITH cv AS (
@@ -866,31 +878,23 @@ object VectorQueries {
     * at nprobe 4 + 100-candidate re-rank (sf0.01/sf0.1).
     *
     * Scale shape: both codebooks are tiny BY DESIGN and collected — cell
-    * assignment and PQ encoding are codegen'd narrow maps; the probe side
-    * is broadcast into one cell equi-join; ADC is a pure projection over
-    * the candidates (at real scale the partial dot tables would be
-    * precomputed per query — 8×16 values — which this expression shape
-    * makes explicit). Candidates are O(n/cells · nprobe) and the re-rank
-    * fetches RERANK full vectors per query (a bounded equi-join) — never
-    * O(n²), never a full-vector scan. */
+    * assignment ([[ivfFront]]) and PQ encoding are codegen'd narrow maps;
+    * the probe side ([[ivfProbes]]) is broadcast into one cell equi-join;
+    * ADC is a pure projection over the candidates (at real scale the
+    * partial dot tables would be precomputed per query — 8×16 values —
+    * which this expression shape makes explicit). Candidates are O(n/cells · nprobe) and the re-rank
+    * ([[exactRerank]]) fetches RERANK full vectors per query (a bounded
+    * equi-join) — never O(n²), never a full-vector scan. */
   def annIvfPq(s: SparkSession, dir: String): DataFrame =
     annIvfPq(s, dir, PQ_NPROBE, PQ_KC, PQ_ITERS, PQ_RERANK)
 
   def annIvfPq(s: SparkSession, dir: String, NPROBE: Int, KC: Int,
       ITERS: Int, RERANK: Int): DataFrame = {
+    require(RERANK > 0, s"annIvfPq: RERANK=$RERANK — the exact refine step is the point")
     val S = 8; val SUB = 8
-    // --- coarse quantizer: shared micro-unit label centroids ---
-    val (labels, cvecs) = coarseCodebook(s, dir)
-    val idxToLabel = typedlit(labels.toSeq)
-    // e feeds the index, the probe side and the exact re-rank — round-22
-    // A/B: NOT persisted (caching the array<double>+cells projection costs
-    // more than the narrow rescans it saves; PQ training no longer reads it
-    // per execution — the codebooks are memoized)
-    val e = tPar(s, dir, "embeddings")
-      .select(col("vec_id"), vecD(col("embedding")).as("v"))
-      .withColumn("cells", transform(
-        nearestCodes(col("v"), cvecs, NPROBE, "cosine"),
-        i => element_at(idxToLabel, (i + lit(1)).cast("int"))))
+    // e feeds the index, the probe side and the exact re-rank (PQ training
+    // reads it once per tier — the codebooks are memoized)
+    val e = ivfFront(s, dir, NPROBE)
     // --- PQ codebooks: seeds + ITERS Lloyd refits, shared machinery (ops/Pq) ---
     val cb2 = pqCodebooks(e, dir, S, SUB, KC, ITERS)
     // --- index: home cell + 8 codes per vector (8 bytes of payload) ---
@@ -910,52 +914,20 @@ object VectorQueries {
         dot(slice(col("qv"), si * SUB + 1, SUB), typedlit(cb2(si)(c).toSeq))
       }: _*)
     }: _*)
-    val probes = e.filter(col("vec_id") <= idAtRank(e, dir, 10))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        explode(slice(col("cells"), 1, NPROBE)).as("probe"))
-      .withColumn("adctab", adcTab)
+    val probes = ivfProbes(e, dir, NPROBE).withColumn("adctab", adcTab)
     // ADC over the candidate's codes: fixed-order fold from 0.0 so the
     // DuckDB list_reduce mirror is bit-identical
     val adc = (0 until S).map { si =>
       element_at(element_at(col("adctab"), si + 1),
         (element_at(col("codes"), si + 1) + lit(1)).cast("int"))
     }.foldLeft(lit(0.0))(_ + _)
-    val w = Window.partitionBy("q_id").orderBy(col("adc").desc, col("n_id"))
     val cand = broadcast(probes)
       .join(cells, col("probe") === col("cell") && col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("qv"), col("n_id"), adc.as("adc"))
-    // both branches name the ranking column `score` — the RERANK<=0 shape
-    // scores by ADC, the re-rank shape by exact cosine, but callers of the
-    // parameterized overload always get the same schema
-    if (RERANK <= 0)
-      cand.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("n_id"), col("adc").as("score"))
-        .orderBy("q_id", "rank")
-    else {
-      // IVFADC + R re-ranking (Jégou, Tavenard, Douze, Amsaleg, "Searching
-      // in one billion vectors: re-rank with source coding", ICASSP 2011):
-      // the ADC shortlist (top RERANK per query) is re-scored with the
-      // EXACT vectors — only RERANK × |probes| rows ever fetch a full
-      // vector, so the index still reads 8 bytes/candidate and the refine
-      // step is a bounded equi-join, never a scan
-      val short = cand.withColumn("arank", row_number().over(w))
-        .filter(col("arank") <= RERANK)
-        .select(col("q_id"), col("qv"), col("n_id"))
-      val exact = e.select(col("vec_id").as("n_id"), col("v").as("nv"))
-      val wx = Window.partitionBy("q_id").orderBy(col("score").desc, col("n_id"))
-      // the shortlist is ≤ RERANK × |probes| rows — broadcast it so the
-      // static plan is a BroadcastHashJoin against the full vector table
-      // (GraftPlanSpec asserts this), not an AQE-rescued sort-merge
-      broadcast(short).join(exact, "n_id")
-        .select(col("q_id"), col("n_id"),
-          (dot(col("qv"), col("nv")) /
-            (sqrt(dot(col("qv"), col("qv"))) * sqrt(dot(col("nv"), col("nv"))))).as("score"))
-        .withColumn("rank", row_number().over(wx).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("n_id"), col("score"))
-        .orderBy("q_id", "rank")
-    }
+    // the ADC shortlist (top RERANK per query) is re-scored with the exact
+    // vectors — the index still reads 8 bytes per candidate
+    exactRerank(TopK.perGroup(cand, "q_id", Seq(col("adc").desc, col("n_id")),
+      RERANK, "arank").select(col("q_id"), col("qv"), col("n_id")), e)
   }
 
   val annIvfPqSql: String = {
@@ -1090,52 +1062,30 @@ object VectorQueries {
     * recall tracks the IVF-flat path — the memory/recall middle point of
     * the index family.
     *
-    * Scale shape: identical to [[annIvfPq]] — collected constant-size
+    * Scale shape: the [[annIvfPq]] shape — the shared [[ivfFront]] cell
+    * assignment and [[ivfProbes]] probe side, collected constant-size
     * training state (128 longs + the coarse codebook), codegen'd narrow
-    * encode, broadcast probes into one cell equi-join, broadcast bounded
-    * re-rank join. Candidates O(n/cells · nprobe); never O(n²). */
+    * encode, broadcast probes into one cell equi-join, then the shared
+    * [[exactRerank]]. Candidates O(n/cells · nprobe); never O(n²). */
   def annSq(s: SparkSession, dir: String): DataFrame =
     annSq(s, dir, IVF_NPROBE, SQ_RERANK)
 
   def annSq(s: SparkSession, dir: String, NPROBE: Int, RERANK: Int): DataFrame = {
     require(RERANK > 0, s"annSq: RERANK=$RERANK — the exact refine step is the point")
-    // --- coarse quantizer: shared micro-unit label centroids ---
-    val (labels, cvecs) = coarseCodebook(s, dir)
-    val idxToLabel = typedlit(labels.toSeq)
-    // round-22 A/B: not persisted — see annIvfPq
-    val e = tPar(s, dir, "embeddings")
-      .select(col("vec_id"), vecD(col("embedding")).as("v"))
-      .withColumn("cells", transform(
-        nearestCodes(col("v"), cvecs, NPROBE, "cosine"),
-        i => element_at(idxToLabel, (i + lit(1)).cast("int"))))
+    val e = ivfFront(s, dir, NPROBE)
     // --- SQ8 ranges + per-vector codes (64 bytes of candidate payload) ---
     val r = sqRanges(e, dir)
     val cells = e.withColumn("codes", graft.ops.Sq.encode(col("v"), r))
       .select(col("vec_id").as("n_id"), element_at(col("cells"), 1).as("cell"),
         col("codes"))
-    val probes = e.filter(col("vec_id") <= idAtRank(e, dir, 10))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        explode(slice(col("cells"), 1, NPROBE)).as("probe"))
     // approximate score: full query against the dequantized candidate —
     // same sequential fold as the DuckDB list_reduce mirror
-    val w = Window.partitionBy("q_id").orderBy(col("adc").desc, col("n_id"))
-    val cand = broadcast(probes)
+    val cand = broadcast(ivfProbes(e, dir, NPROBE))
       .join(cells, col("probe") === col("cell") && col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("qv"), col("n_id"),
         dot(col("qv"), graft.ops.Sq.decode(col("codes"), r)).as("adc"))
-    val short = cand.withColumn("arank", row_number().over(w))
-      .filter(col("arank") <= RERANK)
-      .select(col("q_id"), col("qv"), col("n_id"))
-    val exact = e.select(col("vec_id").as("n_id"), col("v").as("nv"))
-    val wx = Window.partitionBy("q_id").orderBy(col("score").desc, col("n_id"))
-    broadcast(short).join(exact, "n_id")
-      .select(col("q_id"), col("n_id"),
-        (dot(col("qv"), col("nv")) /
-          (sqrt(dot(col("qv"), col("qv"))) * sqrt(dot(col("nv"), col("nv"))))).as("score"))
-      .withColumn("rank", row_number().over(wx).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("n_id"), col("score"))
-      .orderBy("q_id", "rank")
+    exactRerank(TopK.perGroup(cand, "q_id", Seq(col("adc").desc, col("n_id")),
+      RERANK, "arank").select(col("q_id"), col("qv"), col("n_id")), e)
   }
 
   val annSqSql: String =
@@ -1232,16 +1182,16 @@ object VectorQueries {
     * signature — a LINEAR scan, but over 8 bytes per vector, which at 10⁹
     * vectors is 8 GB of sequential reads, memory-bandwidth trivial and
     * embarrassingly partition-parallel — then the top-RERANK shortlist is
-    * re-ranked with exact cosine (the same bounded refinement as the PQ
-    * and SQ paths). No training beyond 65 longs, no routing to mistune:
+    * re-ranked with exact cosine ([[exactRerank]], the bounded refinement
+    * the PQ and SQ paths share). No training beyond 65 longs, no routing to mistune:
     * the signature scan's recall is whatever the sign bits preserve,
     * measured in the recall self-check.
     *
     * Scale shape: the scan joins broadcast probes against a 3-long-wide
     * projection of the corpus (signature words only — full vectors never
-    * enter the scan); rank-≤k window runs as a partial group-limit before
-    * the shuffle (WindowGroupLimit); the re-rank is a broadcast bounded
-    * equi-join fetching ≤RERANK full vectors per query. */
+    * enter the scan); the [[graft.ops.TopK]] shortlist runs as a partial
+    * group-limit before the shuffle (WindowGroupLimit); the re-rank is a
+    * broadcast bounded equi-join fetching ≤RERANK full vectors per query. */
   def annHamming(s: SparkSession, dir: String): DataFrame =
     annHamming(s, dir, BQ_RERANK)
 
@@ -1270,24 +1220,12 @@ object VectorQueries {
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val c = sig.select(col("vec_id").as("n_id"), col("lo").as("nlo"),
       col("hi").as("nhi"))
-    val wh = Window.partitionBy("q_id").orderBy(col("ham"), col("n_id"))
-    val short = broadcast(q).join(c, col("q_id") =!= col("n_id"))
+    val scan = broadcast(q).join(c, col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"),
         graft.ops.Bq.hamming(col("qlo"), col("qhi"), col("nlo"), col("nhi")).as("ham"))
-      .withColumn("hrank", row_number().over(wh))
-      .filter(col("hrank") <= RERANK)
+    exactRerank(TopK.perGroup(scan, "q_id", Seq(col("ham"), col("n_id")), RERANK, "hrank")
       .join(broadcast(qv), "q_id")
-      .select(col("q_id"), col("qv"), col("n_id"))
-    val exact = e.select(col("vec_id").as("n_id"), col("v").as("nv"))
-    val wx = Window.partitionBy("q_id").orderBy(col("score").desc, col("n_id"))
-    broadcast(short).join(exact, "n_id")
-      .select(col("q_id"), col("n_id"),
-        (dot(col("qv"), col("nv")) /
-          (sqrt(dot(col("qv"), col("qv"))) * sqrt(dot(col("nv"), col("nv"))))).as("score"))
-      .withColumn("rank", row_number().over(wx).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("n_id"), col("score"))
-      .orderBy("q_id", "rank")
+      .select(col("q_id"), col("qv"), col("n_id")), e)
   }
 
   val annHammingSql: String =
@@ -1554,14 +1492,12 @@ object VectorQueries {
       .withColumn("n2", dot(col("v"), col("v"))))
     val probes = e.filter(col("vec_id") <= idAtRank(e, dir, MMR_QN))
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_id"))
     val pool = graft.util.CacheBin.persist(
-      e.crossJoin(broadcast(probes))
-        .withColumn("cosine",
-          dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("n2"))))
-        .withColumn("rel_micro", round(col("cosine") * 1000000).cast("long"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= MMR_POOL)
+      TopK.perGroup(e.crossJoin(broadcast(probes))
+          .withColumn("cosine",
+            dot(col("qv"), col("v")) / (sqrt(col("qn")) * sqrt(col("n2"))))
+          .withColumn("rel_micro", round(col("cosine") * 1000000).cast("long")),
+        "q_id", Seq(col("cosine").desc, col("vec_id")), MMR_POOL, "rk")
         .select(col("q_id"), col("vec_id"), col("v"), col("n2"),
           col("rel_micro")))
     val a = pool.select(col("q_id"), col("vec_id").as("ida"), col("v").as("va"),

@@ -47,17 +47,35 @@ object SparkSpec {
   private val tmpDirs =
     java.util.Collections.synchronizedList(new java.util.ArrayList[java.nio.file.Path]())
 
+  /** Spark installs its own shutdown hook (SparkContext stop, Spark temp
+    * dir deletion) in Hadoop's ShutdownHookManager at priority 40; hooks
+    * there run in descending priority, so this one runs first. */
+  private val CleanupPriority = 50
+
+  private def quietly(body: => Unit): Unit =
+    try body catch { case _: Throwable => () }
+
+  /** At JVM exit, in this order: stop every active streaming query, stop
+    * the shared session, and only then delete the scratch dirs. Deleting
+    * while the state stores still run leaves RocksDB maintenance writing
+    * into vanished dirs, which slows the exit and logs an error per store.
+    * (`StateStore.stop()` is not called here: it waits for the maintenance
+    * pool while holding the lock a maintenance thread is blocked on.) */
   private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() => {
+      SparkSession.getDefaultSession.foreach { s =>
+        s.streams.active.foreach(q => quietly(q.stop()))
+        quietly(s.stop())
+      }
       tmpDirs.forEach { p =>
-        try {
+        quietly {
           val walk = java.nio.file.Files.walk(p)
           try walk.sorted(java.util.Comparator.reverseOrder()).forEach { q =>
-            try java.nio.file.Files.deleteIfExists(q)
-            catch { case _: Throwable => () }
+            quietly(java.nio.file.Files.deleteIfExists(q))
           } finally walk.close()
-        } catch { case _: Throwable => () }
-      }))
+        }
+      }
+    }, CleanupPriority, 2, java.util.concurrent.TimeUnit.MINUTES)
 
   /** Scratch dir (checkpoints, file sources/sinks) deleted recursively when
     * the test JVM exits — repeated test runs must not accumulate temp dirs. */

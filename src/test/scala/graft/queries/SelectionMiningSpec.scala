@@ -1,9 +1,12 @@
 package graft.queries
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Differential specs for the round-18 data-selection operators:
-  * text_dsir_weights and vec_hard_negatives. Expected results are
+/** Differential specs for the round-18 data-selection operators
+  * (text_dsir_weights and vec_hard_negatives) and for the ANN retrieval
+  * tail they share with vec_ann_topk, vec_ann_ivf and the three re-ranked
+  * indexes (vec_ann_ivfpq, vec_ann_sq, vec_ann_hamming). Expected results are
   * re-derived in PLAIN SCALA from the raw parquet (no Spark query
   * machinery), so a bug in the distributed formulation cannot hide in its
   * own oracle mirror.
@@ -12,7 +15,7 @@ class SelectionMiningSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.Row] =
+  private def rows(df: DataFrame): Array[Row] =
     graft.util.CacheBin.withScope { df.collect() }
 
   // ---- plain-scala mirrors of the shared text/hash frontend ----
@@ -65,20 +68,34 @@ class SelectionMiningSpec extends SparkSpec {
     all(got.map(_._4)) should be <= 1000000L
   }
 
-  behavior of "vec_hard_negatives"
+  // ---- plain-scala reference of the embedding table and its IVF routing ----
 
-  it should "equal the plain-Scala IVF-routed pos/neg mining" in {
-    val emb = rows(spark.read.parquet(s"$dir/embeddings.parquet")
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0; var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** (vec_id, label, embedding as doubles), ascending vec_id. */
+  private lazy val emb: Array[(Long, Long, Array[Double])] =
+    rows(spark.read.parquet(s"$dir/embeddings.parquet")
       .select("vec_id", "label", "embedding"))
       .map(r => (r.getLong(0), r.getInt(1).toLong,
         r.getSeq[Float](2).map(_.toDouble).toArray))
       .sortBy(_._1)
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
-    // exact micro-unit centroids per label, label-ascending
+  private lazy val vecs = emb.map(t => t._1 -> t._3).toMap
+  private lazy val n2s = emb.map(t => t._1 -> dot(t._3, t._3)).toMap
+  private lazy val label = emb.map(t => t._1 -> t._2).toMap
+  /** The 10 smallest vec_ids: every ANN query's probe set. */
+  private lazy val probes = emb.map(_._1).sorted.take(10).toSeq
+
+  /** Exact fold-dot cosine of two vectors of the table. */
+  private def cosine(q: Long, n: Long): Double =
+    dot(vecs(q), vecs(n)) / (math.sqrt(n2s(q)) * math.sqrt(n2s(n)))
+
+  /** Per vector, every coarse cell (label) by (cosine desc, label asc)
+    * against the exact micro-unit per-label centroids. */
+  private lazy val cellRanks: Map[Long, Seq[Long]] = {
     val labs = emb.map(_._2).distinct.sorted
     val cvecs = labs.map { l =>
       val sel = emb.filter(_._2 == l).map(_._3)
@@ -88,25 +105,37 @@ class SelectionMiningSpec extends SparkSpec {
       sums.map(_.toDouble / (sel.length * 1000000L).toDouble)
     }
     val cn2 = cvecs.map(c => dot(c, c))
-    // per-vector cell ranking by (cosine desc, label/index asc)
-    val cellRanks: Map[Long, Seq[Long]] = emb.map { case (id, _, v) =>
+    emb.map { case (id, _, v) =>
       val n2 = dot(v, v)
       val scored = labs.indices.map { j =>
         (dot(v, cvecs(j)) / (math.sqrt(n2) * math.sqrt(cn2(j))), j)
       }
       id -> scored.sortBy { case (c, j) => (-c, j) }.map(x => labs(x._2))
     }.toMap
-    val home = cellRanks.map { case (id, cs) => id -> cs.head }
-    val probes = emb.map(_._1).sorted.take(10)
-    val n2s = emb.map(t => t._1 -> dot(t._3, t._3)).toMap
-    val vecs = emb.map(t => t._1 -> t._3).toMap
-    val label = emb.map(t => t._1 -> t._2).toMap
+  }
+  private lazy val home = cellRanks.map { case (id, cs) => id -> cs.head }
+
+  /** Probe `q`'s IVF candidates over its 6 nearest cells, itself excluded,
+    * as (n_id, label, cosine). */
+  private def routed(q: Long): Seq[(Long, Long, Double)] = {
+    val cells = cellRanks(q).take(6).toSet
+    emb.toSeq.filter(t => t._1 != q && cells.contains(home(t._1)))
+      .map { case (id, l, _) => (id, l, cosine(q, id)) }
+  }
+
+  /** The top 5 of `cand` per probe as (q_id, rank, n_id, cosine) rows. */
+  private def top5(q: Long, cand: Seq[(Long, Double)]): Seq[(Long, Long, Long, Double)] =
+    cand.sortBy(c => (-c._2, c._1)).take(5).zipWithIndex
+      .map { case ((n, c), i) => (q, i + 1L, n, c) }
+
+  private def rankedRows(df: DataFrame): Vector[(Long, Long, Long, Double)] =
+    rows(df).map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toVector
+
+  behavior of "vec_hard_negatives"
+
+  it should "equal the plain-Scala IVF-routed pos/neg mining" in {
     val expected = probes.flatMap { q =>
-      val cells = cellRanks(q).take(6).toSet
-      val cand = emb.filter(t => t._1 != q && cells.contains(home(t._1)))
-        .map { case (id, l, v) =>
-          (id, l, dot(vecs(q), v) / (math.sqrt(n2s(q)) * math.sqrt(n2s(id))))
-        }
+      val cand = routed(q)
       val pos = cand.filter(_._2 == label(q)).sortBy(c => (-c._3, c._1)).headOption
       val neg = cand.filter(_._2 != label(q)).sortBy(c => (-c._3, c._1)).headOption
       (pos, neg) match {
@@ -132,4 +161,40 @@ class SelectionMiningSpec extends SparkSpec {
       m shouldBe math.round((pc - nc) * 1000000)
     }
   }
+
+  behavior of "the ANN retrieval tail"
+
+  it should "rank vec_ann_topk as the plain-Scala brute-force top 5" in {
+    val expected = probes.flatMap { q =>
+      top5(q, emb.toSeq.filter(_._1 != q).map(t => (t._1, cosine(q, t._1))))
+    }.toVector
+    rankedRows(VectorQueries.annTopK(spark, dir)) shouldBe expected
+  }
+
+  it should "rank vec_ann_ivf as the plain-Scala IVF-routed top 5" in {
+    val expected = probes.flatMap(q => top5(q, routed(q).map(c => (c._1, c._3)))).toVector
+    expected.nonEmpty shouldBe true
+    rankedRows(VectorQueries.annIvf(spark, dir)) shouldBe expected
+  }
+
+  for ((name, query) <- Seq[(String, (SparkSession, String) => DataFrame)](
+      ("vec_ann_ivfpq", VectorQueries.annIvfPq(_, _)),
+      ("vec_ann_sq", VectorQueries.annSq(_, _)),
+      ("vec_ann_hamming", VectorQueries.annHamming(_, _))))
+    it should s"re-rank $name by the plain-Scala exact cosine, at most 5 per probe" in {
+      val got = rankedRows(query(spark, dir))
+      got.nonEmpty shouldBe true
+      got.foreach { case (q, _, n, score) =>
+        n should not be q
+        probes should contain(q)
+        score shouldBe cosine(q, n)
+      }
+      got.groupBy(_._1).foreach { case (q, rs) =>
+        withClue(s"probe $q: ") {
+          rs.size should be <= 5
+          rs.map(_._2) shouldBe (1L to rs.size.toLong)
+          rs.map(r => (r._3, r._4)) shouldBe rs.map(r => (r._3, r._4)).sortBy(r => (-r._2, r._1))
+        }
+      }
+    }
 }
