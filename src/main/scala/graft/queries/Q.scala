@@ -35,10 +35,15 @@ object Q {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark) // idempotent, cheap
-    spark.read.parquet(s"$dir/$name.parquet")
-  }
+  /** Table `name` of tier `dir`, read through the per-tier table catalog:
+    * its schema is [[graft.util.Memo.metadata]] (`table_schema`), inferred
+    * once per key — [[tableKey]] plus every `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` value set in the session, which change
+    * the inferred types — so a build after the first runs no schema-
+    * inference job. Each call still returns a fresh relation with fresh
+    * attribute ids, so two reads of one table self-join cleanly. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, dir, name, tableKey(dir, name))
 
   /** Table spread across all cores — but only when the scan is actually
     * under-parallel. The driver test tables are single row-group parquet
@@ -49,12 +54,31 @@ object Q {
     * many files/row-groups and the scan already has >= cores splits — there
     * the repartition is GATED OFF so no full-data exchange is inserted. */
   def tPar(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = t(spark, dir, name)
+    val key = tableKey(dir, name)
+    val df = read(spark, dir, name, key)
     val target = spark.sparkContext.defaultParallelism
-    // Physical scan split count (no job is run — only planning).
-    val scanParts = df.rdd.getNumPartitions
+    // Physical scan split count, measured once per table fingerprint: the
+    // split sizing reads the parallelism and the `spark.sql.files.*` values.
+    val scanParts = graft.util.Memo.metadata("table_splits",
+        (key, target, sessionConf(spark, "spark.sql.files.", "spark.sql.leafNodeDefaultParallelism"))) {
+      df.rdd.getNumPartitions
+    }
     if (scanParts < target) df.repartition(target) else df
   }
+
+  private def read(spark: SparkSession, dir: String, name: String, key: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark) // idempotent, cheap
+    val path = s"$dir/$name.parquet"
+    val schema = graft.util.Memo.metadata("table_schema",
+        (key, sessionConf(spark, "spark.sql.parquet.", "spark.sql.legacy.parquet."))) {
+      spark.read.parquet(path).schema
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The session's explicitly set conf values under `prefixes`, sorted. */
+  private def sessionConf(spark: SparkSession, prefixes: String*): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) => prefixes.exists(k.startsWith) }.sorted
 
   /** events table with DuckDB-equivalent timestamp semantics:
     * `ts_us` — epoch micros (long), identical to DuckDB's TIMESTAMP view of

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, StatefulProcessor, StatefulProcessorHandle, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Streaming form of [[graft.ops.Resample.locf]] — continuous per-key
   * LOCF resampling onto a fixed grid with event-time timers.
@@ -48,6 +48,14 @@ object StreamResample {
   /** Best observation of a not-yet-closed bucket. */
   final case class Best(ts: Long, seq: Long, value: Double)
 
+  /** Delete every timer of the current key except `firing`, the expiry of
+    * the timer being handled, which Spark has already removed. */
+  private def clearTimers(h: StatefulProcessorHandle, firing: Option[Long]): Unit =
+    h.listTimers().foreach { t =>
+      val at = t.asInstanceOf[Long]
+      if (!firing.contains(at)) h.deleteTimer(at)
+    }
+
   private final class LocfProcessor(stepMs: Long)
       extends StatefulProcessor[String, Obs, Filled] {
 
@@ -91,8 +99,8 @@ object StreamResample {
     }
 
     /** Clear-then-arm: one timer, at the next unemitted bucket's end. */
-    private def rearm(c: Cursor, wmMs: Long): Unit = {
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
+    private def rearm(c: Cursor, wmMs: Long, firing: Option[Long]): Unit = {
+      clearTimers(getHandle, firing)
       if (c.maxObs > c.lastBucket || !c.started)
         getHandle.registerTimer(math.max(c.lastBucket + 2 * stepMs, wmMs + 1))
     }
@@ -117,7 +125,7 @@ object StreamResample {
       val wm = timerValues.getCurrentWatermarkInMs()
       val (nc, out) = drain(key, wm)
       cur.update(nc)
-      rearm(nc, wm)
+      rearm(nc, wm, None)
       out.iterator
     }
 
@@ -126,7 +134,7 @@ object StreamResample {
       val wm = timerValues.getCurrentWatermarkInMs()
       val (nc, out) = drain(key, wm)
       cur.update(nc)
-      rearm(nc, wm)
+      rearm(nc, wm, Some(expiredTimerInfo.getExpiryTimeInMs()))
       out.iterator
     }
   }
@@ -209,8 +217,9 @@ object StreamResample {
       (c, out.result())
     }
 
-    private def rearm(wmMs: Long): Unit = {
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
+    /** As LOCF's rearm: one timer, at the oldest pending bucket's end. */
+    private def rearm(wmMs: Long, firing: Option[Long]): Unit = {
+      clearTimers(getHandle, firing)
       val ks = pend.keys()
       var next = Long.MaxValue
       while (ks.hasNext) next = math.min(next, ks.next())
@@ -233,7 +242,7 @@ object StreamResample {
       val wm = timerValues.getCurrentWatermarkInMs()
       val (nc, out) = drain(key, wm)
       cur.update(nc)
-      rearm(wm)
+      rearm(wm, None)
       out.iterator
     }
 
@@ -242,7 +251,7 @@ object StreamResample {
       val wm = timerValues.getCurrentWatermarkInMs()
       val (nc, out) = drain(key, wm)
       cur.update(nc)
-      rearm(wm)
+      rearm(wm, Some(expiredTimerInfo.getExpiryTimeInMs()))
       out.iterator
     }
   }

@@ -35,19 +35,21 @@ import scala.collection.mutable.ArrayBuffer
   * Both kinds are LRU-bounded by a constant. Past the bound the least-
   * recently-used artifact is dropped; a dropped frame is unpersisted.
   *
-  * Every hit and build is recorded in the calling thread's [[reading]]
-  * scope, so a caller can tell which artifacts a query read (Bench derives
-  * its `memoized` field from it). Query plans are built on the caller's
-  * thread, which is where every read happens.
+  * Every hit and build of an artifact is recorded in the calling thread's
+  * [[reading]] scope, so a caller can tell which artifacts a query read
+  * (Bench derives its `memoized` field from it). Query plans are built on
+  * the caller's thread, which is where every read happens. [[metadata]]
+  * (table schemas and split counts) is held like a scalar but not recorded.
   */
 object Memo {
 
   /** One registry read: the artifact's name and whether this read built it. */
   final case class Read(artifact: String, built: Boolean)
 
-  /** A full sf0.01 Verify run creates 13 scalar keys (and 5 frames), so
-    * this holds two tiers with room to spare. */
-  private[graft] val MaxScalars = 32
+  /** A full sf0.01 Verify run creates 27 scalar keys (13 artifacts plus
+    * [[graft.queries.Q]]'s table catalog: 10 schemas and 4 split counts)
+    * and 5 frames, so this holds two tiers with room to spare. */
+  private[graft] val MaxScalars = 64
 
   /** Two full tiers' worth of the five frame kinds (gram counts, LM scores,
     * kNN edges, BM25 inverted index, near-dup candidate pairs). */
@@ -55,13 +57,19 @@ object Memo {
 
   /** The driver-side value `artifact` under `key`, computed on first use. */
   def scalar[V](artifact: String, key: Any)(compute: => V): V =
-    scalars.getOrBuild(Key(null, artifact, key))(compute)
+    scalars.getOrBuild(Key(null, artifact, key), recorded = true)(compute)
+
+  /** As [[scalar]], for table metadata ([[graft.queries.Q]]'s table
+    * catalog): it shares the scalar bound but is not recorded in the
+    * [[reading]] scope, because it is not a per-tier artifact. */
+  private[graft] def metadata[V](artifact: String, key: Any)(compute: => V): V =
+    scalars.getOrBuild(Key(null, artifact, key), recorded = false)(compute)
 
   /** The persisted frame `artifact` of session `s` under `key`, built on
     * first use. */
   def frame(s: SparkSession, artifact: String, key: String)(
       build: => DataFrame): DataFrame =
-    frames.getOrBuild(Key(s, artifact, key))(build)
+    frames.getOrBuild(Key(s, artifact, key), recorded = true)(build)
 
   /** Drop (and unpersist) every built frame of `s`. */
   def invalidate(s: SparkSession): Unit = frames.dropBuilt(_.session eq s)
@@ -106,11 +114,11 @@ object Memo {
     // access-ordered; guarded by `this`, held only for map updates
     private val cells = new java.util.LinkedHashMap[Key, Cell](16, 0.75f, true)
 
-    def getOrBuild[V](k: Key)(compute: => V): V = {
+    def getOrBuild[V](k: Key, recorded: Boolean)(compute: => V): V = {
       val cell = synchronized { cells.computeIfAbsent(k, _ => new Cell) }
       cell.synchronized {
         if (cell.done) {
-          record(Read(k.artifact, built = false))
+          if (recorded) record(Read(k.artifact, built = false))
           return cell.value.asInstanceOf[V]
         }
         if (!cell.dead) {
@@ -122,11 +130,11 @@ object Memo {
           cell.value = v
           cell.done = true
           synchronized { evict() }
-          record(Read(k.artifact, built = true))
+          if (recorded) record(Read(k.artifact, built = true))
           return v
         }
       }
-      getOrBuild(k)(compute) // its compute threw while this caller waited
+      getOrBuild(k, recorded)(compute) // its compute threw while this caller waited
     }
 
     /** Drop built cells, eldest first, until at most `bound` remain.
