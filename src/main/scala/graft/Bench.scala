@@ -1,29 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: runs the query surface on SPARK_GRAFT_SF_DIR and prints
-  * ONE JSON line {"metric","value","unit","queries","sf"} for the driver.
+/** Benchmark main: times the query surface on SPARK_GRAFT_SF_DIR and
+  * prints ONE JSON line {"metric","value","unit","queries","sf"} for the
+  * driver. `graft.Bench [query ...]` times only the named queries; with no
+  * names it times every query but SKIP and also prints a short summary line.
   *
-  * All queries run fully materialized (count() forces sorts/limits too).
+  * The timed action is a `noop` write ([[materialize]]), the one perfbench
+  * times: every output column is computed, where `count()` would let
+  * Catalyst prune columns (`core_median_prices` lost its percentile).
   * Quadratic small-data oracles (brute-force pair scans that exist only to
   * validate the LSH paths) are excluded via SKIP — the scale path for those
   * semantics (minhash/LSH-bucketed variants) IS timed.
   *
-  * **Fork-per-chunk mode (default since round 8).** The round-7 root cause
-  * analysis (BASELINE.md case study) showed per-query numbers inside one
-  * long-lived bench JVM carry ~0.5-1 s of accumulated heap/GC state on
-  * allocation-heavy queries — every pass pays it, so min-of-N cannot
-  * remove it, and numbers stop being comparable across rounds whose bench
-  * query COUNTS differ. The fix: the parent process forks one child JVM
-  * per ≤CHUNK-query slice of each query family (core_, text_, vec_, ...);
-  * each child warms up, times ITS OWN small slice with interleaved
-  * min-of-N passes, and prints the same JSON line; the parent merges.
-  * Heap state no longer accumulates across dozens of queries, so numbers
-  * approximate the isolated fresh-JVM truth (tools/TimeQueries). Opt out
-  * (the old single-JVM behavior) with SPARK_GRAFT_BENCH_FORK=0; any child
-  * failure also falls back to single-JVM so the driver always gets its
-  * one JSON line.
+  * **One child JVM per chunk.** Per-query numbers inside one long-lived
+  * bench JVM carry ~0.5-1 s of accumulated heap/GC state on
+  * allocation-heavy queries (BASELINE.md round-7 case study) — every pass
+  * pays it, so min-of-N cannot remove it. So the parent forks one child
+  * JVM per ≤CHUNK-query slice of each query family (core_, text_, vec_,
+  * ...), started with the parent's own JVM arguments and class path; each
+  * child warms up, times its own slice with interleaved min-of-RUNS
+  * passes and prints one JSON line; the parent merges. A chunk that fails
+  * fails the run: its queries are named on stderr and the exit is
+  * non-zero.
   */
 object Bench {
 
@@ -48,13 +48,20 @@ object Bench {
   private def memoizedJson(names: Iterable[String]): String =
     names.toSeq.sorted.map("\"" + _ + "\"").mkString("\"memoized\":[", ",", "],")
 
+  /** The JSON line of a run or a chunk: per-query times and their total. */
+  private def benchLine(times: Seq[(String, Double)], calibJson: String,
+      memoized: Iterable[String], sfDir: String): String = {
+    val qs = times.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${num(times.map(_._2).sum)},"unit":"sec","runs":$RUNS,"agg":"min",$calibJson${memoizedJson(memoized)}"queries":$qs,"sf":"$sfDir"}"""
+  }
+
   /** Run one query execution in its own [[graft.util.CacheBin]] scope;
     * true when it read a [[graft.util.Memo]] artifact. */
   private[graft] def readsArtifacts(execution: => Unit): Boolean =
     graft.util.Memo.reading(graft.util.CacheBin.withScope(execution))._2.nonEmpty
 
-  private def orderedQueries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-    SparkEntry.queries.toSeq.sortBy(_._1).filterNot(q => SKIP(q._1))
+  private def benchedQueries: Seq[String] =
+    SparkEntry.queries.keys.toSeq.sorted.filterNot(SKIP)
 
   private def groupOf(name: String): String = name.takeWhile(_ != '_')
 
@@ -93,21 +100,21 @@ object Bench {
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
+  /** Timed passes per query; each query reports its minimum. */
+  private val RUNS = 3
+
+  /** The timed action: a `noop` write, which computes every output column
+    * (perfbench times the same action). */
+  private[graft] def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // child protocol: an explicit comma-separated query list
-    val chunk = sys.env.get("SPARK_GRAFT_BENCH_QUERIES").map(_.split(',').toSet)
-    val fork = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1") == "1"
-    if (chunk.isDefined) runInProcess(sfDir, chunk) // child: one chunk, one JSON line
-    else if (fork) {
-      forked(sfDir) match {
-        case Some((json, summary)) =>
-          println(json); writeFullLine(json); println(summaryLine(summary))
-        case None =>
-          System.err.println("[bench] fork-per-group failed; single-JVM fallback")
-          runInProcess(sfDir, None)
-      }
-    } else runInProcess(sfDir, None)
+    sys.env.get("SPARK_GRAFT_BENCH_QUERIES") match {
+      case Some(chunk) => runChunk(sfDir, chunk.split(',').toSeq) // one JSON line
+      case None => if (!runAll(sfDir, args.toSeq)) sys.exit(1)
+    }
   }
 
   /** Task slots: `SPARK_GRAFT_CPUS` when it is a positive integer, else
@@ -148,8 +155,8 @@ object Bench {
     * the full line: total + calib + a pointer to the per-cpus full file.
     * Deliberately NO "queries" key — a parser that takes this line gets an
     * honest total rather than an empty per-query map it could misread as
-    * every query having been dropped. Parent/whole-surface mode only; a
-    * chunk child must print exactly one line for parseChunkLine. */
+    * every query having been dropped. Whole-surface runs only; a chunk
+    * child must print exactly one line for parseChunkLine. */
   private[graft] def summaryLine(s: Summary): String = {
     val calib = s.calib.fold("")(c => s""""calib":${num(c)},""")
     s"""{"metric":"total","value":${num(s.total)},"unit":"sec",$calib"cpus":${s.cpus},"n_queries":${s.nQueries},"mode":"summary","full":"BENCH_FULL_c${s.cpus}.json"}"""
@@ -168,19 +175,14 @@ object Bench {
   private[graft] final case class Chunk(times: Seq[(String, Double)],
       calib: Option[Double], memoized: Seq[String])
 
-  /** Run one chunk of queries in a child JVM and parse its line. */
-  private def runGroup(g: Seq[String], cp: String): Option[Chunk] = try {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val addOpens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-      "java.io", "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val heap = sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAP", "8g") // 8g beats 32g on this box (BASELINE.md)
-    val cmd = (javaBin +: addOpens) ++ Seq(s"-Xmx$heap",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-Dlog4j2.configurationFile=conf/log4j2.properties",
-      "-cp", cp, "graft.Bench")
+  /** Run one chunk of queries in a child JVM and parse its line. The child
+    * gets the parent's JVM arguments (heap, `--add-opens`, system
+    * properties) and class path. */
+  private def runGroup(g: Seq[String]): Option[Chunk] = try {
+    import scala.jdk.CollectionConverters._
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++
+      java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")
     val pb = new ProcessBuilder(cmd: _*)
     pb.environment().put("SPARK_GRAFT_BENCH_QUERIES", g.mkString(","))
     // child stderr (Spark logging) flows straight through — buffering it
@@ -189,8 +191,11 @@ object Bench {
     val proc = pb.start()
     val out = new String(proc.getInputStream.readAllBytes(),
       java.nio.charset.StandardCharsets.UTF_8)
-    if (proc.waitFor() != 0) None
-    else out.linesIterator.find(_.startsWith("{\"metric\""))
+    val code = proc.waitFor()
+    if (code != 0) {
+      System.err.println(s"[bench] chunk ${g.mkString(",")}: child exited $code")
+      None
+    } else out.linesIterator.find(_.startsWith("{\"metric\""))
       .flatMap(parseChunkLine(_, g))
   } catch { case e: Throwable =>
     System.err.println(s"[bench] chunk ${g.mkString(",")} failed: ${e.getMessage}"); None
@@ -201,7 +206,7 @@ object Bench {
     * fails the chunk: both are bookkeeping, not bench results). A
     * truncated/malformed line, a query the child dropped (bench failure)
     * or a memoized name outside the chunk must fail the WHOLE chunk loudly
-    * (None → parent falls back), never merge partially. */
+    * (None → the run fails), never merge partially. */
   private[graft] def parseChunkLine(line: String, g: Seq[String]): Option[Chunk] = {
     val start = line.indexOf("\"queries\":{")
     val end = line.lastIndexOf("},\"sf\"")
@@ -229,50 +234,54 @@ object Bench {
     }
   }
 
-  private def forked(sfDir: String): Option[(String, Summary)] = {
-    val cpOpt = try {
-      val classesDir = new java.io.File(
-        getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getPath
-      if (new java.io.File("/opt/spark/jars").isDirectory)
-        Some(s"$classesDir:/opt/spark/jars/*")
-      else None
-    } catch { case _: Throwable => None }
-    cpOpt.flatMap { cp =>
-      // family groups keep a query's JVM context stable across rounds;
-      // groups larger than CHUNK split in sorted order
-      val chunks = orderedQueries.map(_._1).groupBy(groupOf).toSeq.sortBy(_._1)
-        .flatMap { case (_, names) => names.sorted.grouped(CHUNK) }
-      val parts = chunks.map { g =>
-        val r = runGroup(g, cp)
-        r.foreach(c => System.err.println(
-          s"[bench] chunk ${g.head}..${g.last}: ${c.times.size} queries done" +
-            c.calib.fold("")(v => f", calib $v%.3f s")))
-        r
-      }
-      val expected = orderedQueries.map(_._1)
-      val merged = parts.flatten.flatMap(_.times).toMap
-      val calibs = parts.flatten.flatMap(_.calib)
-      val memoized = parts.flatten.flatMap(_.memoized)
-      if (parts.exists(_.isEmpty) || expected.exists(q => !merged.contains(q))) None
-      else {
-        val total = expected.map(merged).sum
-        val qs = expected.map(k => "\"" + k + "\":" + num(merged(k))).mkString("{", ",", "}")
-        val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-        // calib: per-child host-speed probe — median is the round's number
-        // (normalize cross-round comparisons with it), min/max the spread
-        val calibJson =
-          if (calibs.isEmpty) ""
-          else s""""calib":${num(median(calibs))},"calib_min":${num(calibs.min)},"calib_max":${num(calibs.max)},"""
-        val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":$runs,"agg":"min",${calibJson}${memoizedJson(memoized)}"mode":"fork-per-group","queries":$qs,"sf":"$sfDir"}"""
-        Some((line, Summary(total, Option.when(calibs.nonEmpty)(median(calibs)),
-          expected.size, benchCpus)))
-      }
+  /** Time `names` (every benched query when empty), one child JVM per
+    * chunk, and print the merged line; false when a name is unknown or a
+    * chunk failed. Only a whole-surface run writes the BENCH_FULL files and
+    * the summary line, so timing a few queries never overwrites them. */
+  private def runAll(sfDir: String, names: Seq[String]): Boolean = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[bench] unknown queries: ${unknown.mkString(", ")}")
+      return false
     }
+    val selected = if (names.isEmpty) benchedQueries else names.distinct
+    // family groups keep a query's JVM context stable across rounds;
+    // groups larger than CHUNK split in sorted order
+    val chunks = selected.groupBy(groupOf).toSeq.sortBy(_._1)
+      .flatMap { case (_, qs) => qs.sorted.grouped(CHUNK) }
+    val parts = chunks.map { g =>
+      val r = runGroup(g)
+      r.foreach(c => System.err.println(
+        s"[bench] chunk ${g.head}..${g.last}: ${c.times.size} queries done" +
+          c.calib.fold("")(v => f", calib $v%.3f s")))
+      g -> r
+    }
+    val failed = parts.collect { case (g, None) => g }.flatten
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] failed, not timed: ${failed.mkString(",")}")
+      return false
+    }
+    val done = parts.flatMap(_._2)
+    val merged = done.flatMap(_.times).toMap
+    val calibs = done.flatMap(_.calib)
+    val times = selected.sorted.map(q => q -> merged(q))
+    // calib: per-child host-speed probe — median is the round's number
+    // (normalize cross-round comparisons with it), min/max the spread
+    val calibJson =
+      if (calibs.isEmpty) ""
+      else s""""calib":${num(median(calibs))},"calib_min":${num(calibs.min)},"calib_max":${num(calibs.max)},"""
+    val line = benchLine(times, calibJson, done.flatMap(_.memoized), sfDir)
+    println(line)
+    if (names.isEmpty) {
+      writeFullLine(line)
+      println(summaryLine(Summary(times.map(_._2).sum,
+        Option.when(calibs.nonEmpty)(median(calibs)), times.size, benchCpus)))
+    }
+    true
   }
 
-  /** Single-JVM bench over all queries (chunk = None) or a child's slice
-    * (chunk = Some(names)). Prints the JSON line itself. */
-  private def runInProcess(sfDir: String, chunk: Option[Set[String]]): Unit = {
+  /** A child: time one chunk of queries and print its JSON line. */
+  private def runChunk(sfDir: String, names: Seq[String]): Unit = {
     val spark = graft.runner.SparkRunner.builder()
       .master(s"local[$benchCpus]")
       .config("spark.sql.shuffle.partitions", benchCpus)
@@ -285,28 +294,14 @@ object Bench {
     val calib = try Some(calibrate(spark)) catch { case e: Throwable =>
       System.err.println(s"[bench] calibration probe failed: ${e.getMessage}"); None }
 
-    val ordered = chunk match {
-      case Some(names) => orderedQueries.filter(q => names(q._1))
-      case None => orderedQueries
-    }
-
-    // JVM/codegen/JIT warm-up, untimed. Whole-surface mode warms one query
-    // per table family; a chunk child warms by running ITS OWN queries once
-    // (scan paths, HOF lambdas and native expressions of that slice).
-    val warm: Seq[String] = chunk match {
-      case Some(_) => ordered.map(_._1)
-      case None => Seq("core_pricing_summary", "ev_session_windows",
-        "join_interval_pairs", "text_minhash_pairs", "vec_ann_lsh",
-        "text_simhash", "text_dup_clusters", "sk_heavy_hitters")
-    }
     // a query that read an artifact in any execution is `memoized`
     val memoized = scala.collection.mutable.Set.empty[String]
-    def execute(name: String)(body: => Unit): Unit =
-      if (readsArtifacts(body)) memoized += name
-    warm.foreach { q =>
-      try execute(q) { SparkEntry.queries(q)(spark, sfDir).count() }
-      catch { case _: Throwable => }
-    }
+    def execute(name: String): Unit =
+      if (readsArtifacts(materialize(SparkEntry.queries(name)(spark, sfDir))))
+        memoized += name
+    // JVM/codegen/JIT warm-up, untimed: each query of the chunk runs once
+    // (scan paths, HOF lambdas and native expressions of that slice)
+    names.foreach(q => try execute(q) catch { case _: Throwable => })
 
     // Each query is executed once per PASS (fresh plan each time) and
     // reports the per-query MINIMUM across passes — steady-state engine
@@ -317,42 +312,32 @@ object Bench {
     // burst that inflates query X in pass 1 has usually passed by the time
     // X runs in pass 2, whereas back-to-back repeats both land inside the
     // same burst. A genuinely slow plan stays slow in every pass.
-    val RUNS = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    require(RUNS >= 1, s"SPARK_GRAFT_BENCH_RUNS=$RUNS — need at least one pass")
     val best = scala.collection.mutable.LinkedHashMap[String, Double](
-      ordered.map(_._1 -> Double.MaxValue): _*)
+      names.map(_ -> Double.MaxValue): _*)
     // alternate pass direction: accumulated JVM state grows with the number
     // of executions BEFORE a query, so a fixed order systematically
     // penalizes the last queries of a chunk — boustrophedon passes give
     // every query at least one early-position sample for the min
-    for (pass <- 1 to RUNS;
-         (name, fn) <- if (pass % 2 == 0) ordered.reverse else ordered) {
+    for (pass <- 1 to RUNS; name <- if (pass % 2 == 0) names.reverse else names) {
       val t0 = System.nanoTime()
       // a failed execution must NOT record its time-to-exception as a bench
       // time — only successful passes compete for the min, so a query that
       // throws in every pass keeps the MaxValue sentinel and gets omitted
       val ok =
-        try { execute(name) { fn(spark, sfDir).count() }; true }
+        try { execute(name); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
       val t = (System.nanoTime() - t0) / 1e9
       if (ok && t < best(name)) best(name) = t
     }
     // a query that failed in EVERY pass still holds MaxValue — omit it
-    // (never format a sentinel into the JSON as a "time"); in child mode
-    // the parent's completeness check then fails the chunk loudly
+    // (never format a sentinel into the JSON as a "time"); the parent's
+    // completeness check then fails the chunk loudly
     val (failed, results) = best.toSeq.partition(_._2 == Double.MaxValue)
     failed.foreach { case (k, _) =>
       System.err.println(s"[bench] $k failed in every pass - omitted") }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val calibJson = calib.fold("")(c => s""""calib":${num(c)},""")
-    val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":$RUNS,"agg":"min",$calibJson${memoizedJson(results.map(_._1).filter(memoized))}"queries":$qs,"sf":"$sfDir"}"""
-    println(line)
-    if (chunk.isEmpty) { // whole-surface mode only, not per-chunk children
-      writeFullLine(line)
-      println(summaryLine(Summary(total, calib, results.size, benchCpus)))
-    }
+    println(benchLine(results, calib.fold("")(c => s""""calib":${num(c)},"""),
+      results.map(_._1).filter(memoized), sfDir))
     spark.stop()
   }
 }

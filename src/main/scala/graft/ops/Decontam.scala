@@ -30,21 +30,19 @@ object Decontam {
     * only — integer arithmetic, deterministic.
     *
     * Both frames must carry `idCol` and `textCol`. BOTH shingle frames are
-    * persisted when `persistShingles` (default): the materialization
-    * boundary stops the optimizer's inferred explode filters
-    * (`size(sh) > 0 AND isnotnull(sh)`) from substituting the whole
-    * normalize + k-gram chain into a scan-side filter — the expression
-    * appears in two conjuncts, so codegen subexpression elimination
-    * evaluates it UNCONDITIONALLY per scan row, before any short-circuit
-    * on the cheap predicates (measured 14 s single-threaded vs 0.1 s at
-    * sf0.1 on the eval branch; see SCALE.md "Optimizer hazards"). Callers
-    * release both via their [[graft.util.CacheBin]] scope. */
+    * persisted: the materialization boundary stops the optimizer's
+    * inferred explode filters (`size(sh) > 0 AND isnotnull(sh)`) from
+    * substituting the whole normalize + k-gram chain into a scan-side
+    * filter — the expression appears in two conjuncts, so codegen
+    * subexpression elimination evaluates it UNCONDITIONALLY per scan
+    * row, before any short-circuit on the cheap predicates (measured 14 s
+    * single-threaded vs 0.1 s at sf0.1 on the eval branch; see SCALE.md
+    * "Optimizer hazards"). Callers release both via their
+    * [[graft.util.CacheBin]] scope. */
   def overlap(corpus: DataFrame, evalDocs: DataFrame, idCol: String,
-      textCol: String, k: Int = 5, persistShingles: Boolean = true): DataFrame = {
-    def shingles(df: DataFrame): DataFrame = {
-      val sh = shingleSets(df, idCol, textCol, k)
-      if (persistShingles) graft.util.CacheBin.persist(sh) else sh
-    }
+      textCol: String, k: Int = 5): DataFrame = {
+    def shingles(df: DataFrame): DataFrame =
+      graft.util.CacheBin.persist(shingleSets(df, idCol, textCol, k))
     val corpusSh = shingles(corpus)
     val evalSet = shingles(evalDocs)
       .select(explode(col("sh")).as("__esh")).distinct()

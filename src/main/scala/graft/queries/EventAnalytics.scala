@@ -184,7 +184,7 @@ object EventAnalytics {
     *  - the run-level `lead(start_us)` stays a window: the runs frame is
     *    value-CHANGES only and the lead is a single pointer chase — the
     *    measured cost is ~100 ms where a self-join alternative pays a
-    *    full shuffle (ScanProfile, r16).
+    *    full shuffle (a one-off stage profile, r16).
     *
     * Use this form when `pipe_skew_audit` flags a dominant key; the window
     * form stays the default on healthy key distributions (codegen'd window

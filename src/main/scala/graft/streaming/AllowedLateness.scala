@@ -63,9 +63,9 @@ object AllowedLateness {
       Fired(kw._1, kw._2, kw._2 + windowSizeMs, s.count, s.sum, n, fin)
 
     /** Single-armed-timeout discipline on the multi-timer API: clear every
-      * registered timer, then arm one strictly-future timer. */
-    private def armTimeout(at: Long, curWm: Long): Unit = {
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
+      * registered timer but `firing`, then arm one strictly-future timer. */
+    private def armTimeout(at: Long, curWm: Long, firing: Option[Long]): Unit = {
+      StreamResample.clearTimers(getHandle, firing)
       getHandle.registerTimer(math.max(at, curWm + 1))
     }
 
@@ -83,7 +83,7 @@ object AllowedLateness {
         if (st.exists()) {
           val s = st.get()
           st.clear()
-          getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
+          StreamResample.clearTimers(getHandle, None)
           Iterator.single(mkFired(kw, s, s.fires + 1, fin = true))
         } else Iterator.empty
       } else {
@@ -97,12 +97,12 @@ object AllowedLateness {
           // immediate re-fire with the updated aggregate
           val next = acc.copy(fires = acc.fires + 1, hasFired = true)
           st.update(next)
-          armTimeout(purgeAt, curWm)
+          armTimeout(purgeAt, curWm, None)
           Iterator.single(mkFired(kw, next, next.fires, fin = false))
         } else {
           // window still open: accumulate silently until W >= windowEnd
           st.update(acc)
-          armTimeout(fireAt, curWm)
+          armTimeout(fireAt, curWm, None)
           Iterator.empty
         }
       }
@@ -121,7 +121,7 @@ object AllowedLateness {
           Iterator(onTime, mkFired(kw, s, s.fires + 2, fin = true))
         } else {
           st.update(s.copy(fires = s.fires + 1, hasFired = true))
-          armTimeout(purgeAt, curWm)
+          armTimeout(purgeAt, curWm, Some(expiredTimerInfo.getExpiryTimeInMs()))
           Iterator.single(onTime)
         }
       } else { // purge: terminal firing, state freed

@@ -50,7 +50,7 @@ object StreamResample {
 
   /** Delete every timer of the current key except `firing`, the expiry of
     * the timer being handled, which Spark has already removed. */
-  private def clearTimers(h: StatefulProcessorHandle, firing: Option[Long]): Unit =
+  private[streaming] def clearTimers(h: StatefulProcessorHandle, firing: Option[Long]): Unit =
     h.listTimers().foreach { t =>
       val at = t.asInstanceOf[Long]
       if (!firing.contains(at)) h.deleteTimer(at)

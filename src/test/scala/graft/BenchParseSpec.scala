@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The fork-per-chunk parent accepts a child's JSON line ONLY when it
   * parses cleanly into exactly the chunk's query set — a truncated line, a
   * dropped query (bench failure) or garbage must fail the chunk (None →
-  * single-JVM fallback), never merge partially or as garbage numbers. */
+  * the run fails), never merge partially or as garbage numbers. */
 class BenchParseSpec extends AnyFunSuite {
 
   private val g = Seq("q_a", "q_b")

@@ -1,10 +1,12 @@
 #!/usr/bin/env bash
 # Run graft.Bench with plain java (no sbt server lock) against the compiled
-# classes. Usage: tools/bench.sh [sf-dir] [cpus]
+# classes. Usage: tools/bench.sh [sf-dir] [cpus] [query ...]
+# With query names only those are timed; with none, the whole benched surface.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.1}"
 CPUS="${2:-$(nproc)}"
+shift $(( $# < 2 ? $# : 2 ))
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -19,4 +21,4 @@ java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Dlog4j2.configurationFile=conf/log4j2.properties \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Bench
+  graft.Bench "$@"

@@ -1,11 +1,11 @@
 #!/usr/bin/env bash
 # 10x scale rehearsal (round-15, VERDICT r14 #1): time the heavy operator
 # family at sf0.1 and at the 10x synthetic tier (tools/scalegen.py) with
-# the isolated warm min-of-3 harness (graft.tools.TimeQueries), so the
-# sf0.1 -> 10x time ratios in SCALE.md are measured, not argued.
+# graft.Bench (warm min-of-3, one fresh JVM per chunk of at most 6 queries),
+# so the sf0.1 -> 10x time ratios in SCALE.md are measured, not argued.
 #
 # Usage: tools/scale.sh [sf-dir] [queries...]
-# Requires: GRAFT_DEV_TOOLS=1 sbt compile (tools classes into target/).
+# Requires: sbt compile (engine classes into target/).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.1}"
@@ -17,16 +17,5 @@ if [ ${#QUERIES[@]} -eq 0 ]; then
     vec_ann_ivfpq vec_ann_sq vec_ann_hamming ev_scd2
     core_scalable_quantiles)
 fi
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
-java $ADD_OPENS \
-  -Xmx"${SPARK_DRIVER_MEM:-24g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Dlog4j2.configurationFile=conf/log4j2.properties \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.tools.TimeQueries "$SF" "${QUERIES[@]}"
+SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-24g}" \
+  exec tools/bench.sh "$SF" "${SPARK_GRAFT_CPUS:-$(nproc)}" "${QUERIES[@]}"

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: BPE delta-trainer cost curve at realistic merge counts
   * (round-15, VERDICT r14 #5). Trains `graft.ops.BpeTrain.merges` on the
   * real documents table at increasing k and prints total + per-round
@@ -18,14 +16,11 @@ object BpeScale {
       else Seq(50, 100, 250, 500)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
+    val spark = graft.runner.SparkRunner.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
     ks.foreach { k =>

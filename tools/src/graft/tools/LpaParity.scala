@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness for the DECOUPLED graph_communities parity run (round 19,
   * VERDICT r18 #2): the full-operator oracle embeds the kNN construction
   * in SQL, which DuckDB cannot finish at the 100× tier (>1 h) — so this
@@ -21,12 +19,9 @@ object LpaParity {
     val out = if (args.length > 1) args(1) else "/tmp/lpa_parity"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.runner.SparkRunner.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     def timed[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.ops.LocalOrDistributed
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for the DISTRIBUTED LabelProp path above its 2^20-edge
@@ -28,10 +28,8 @@ object LpaScale {
     val iters = if (args.length > 2) args(2).toInt else 4
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.runner.SparkRunner.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     /** Power-law-ish edges: uniform src, cubed-uniform dst (hubs). */

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratchpad: recall@5 of the routed ANN indexes vs brute-force exact,
   * scanned over operating points (nprobe, kc, iters, rerank) — picks the
   * config the oracle queries pin. Usage: RecallScan [sfDir] */
@@ -10,12 +8,10 @@ object RecallScan {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
+    val spark = graft.runner.SparkRunner.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.queries.VectorQueries._

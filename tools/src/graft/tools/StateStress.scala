@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
@@ -55,11 +55,9 @@ object StateStress {
       .getOrElse(Set("funnel", "scd2", "retention", "rfm"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
+    val spark = graft.runner.SparkRunner.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // memoryUsedBytes reports RocksDB NATIVE usage (block cache + table
@@ -79,7 +77,6 @@ object StateStress {
         sys.env.getOrElse("GRAFT_BOUND_MB", "500"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark) // NearDup band keys
     import spark.implicits._
 
     val metrics = scala.collection.mutable.ArrayBuffer.empty[BatchMetric]

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -20,10 +20,9 @@ object TtlRepro {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("availablenow")
-    val spark = SparkSession.builder()
+    val spark = graft.runner.SparkRunner.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()

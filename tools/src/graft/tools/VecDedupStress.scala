@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** State-scale stress for the round-19 StreamVecDedup front door (the
@@ -42,12 +41,9 @@ object VecDedupStress {
     val planted = perBatch / 20 // 5%
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.runner.SparkRunner.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     val state = java.nio.file.Files.createTempDirectory("vds_state").toString
     println(s"[vds] state=$state batches=$nBatches rows/batch=$perBatch " +
